@@ -127,12 +127,15 @@ from pyspark.sql.datasource import (
 from pyspark.sql import types as T
 
 from data_warehouse_copy_spark.sources.managed_table import (
+    FileEntry,
     ManagedTable,
     _WHERE_OPS,
     _cdc_skip,
     _file_may_match,
+    _lock_for,
     _map_where,
     _phys_map,
+    _regrow_dv,
 )
 
 if TYPE_CHECKING:
@@ -1299,10 +1302,7 @@ def _table_part_col(t) -> str | None:
     not-yet-existing tables."""
     if not t.exists():
         return None
-    b = t._bounded_ingest_base()
-    if b is not None and b[1] is not None:
-        return b[3]
-    return t.snapshot().partition_date_col
+    return t._dml_base().partition_date_col
 
 
 def _check_writable(m, schema: T.StructType, partition_tagged: bool = False) -> None:
@@ -1508,13 +1508,6 @@ def _commit_staged(
     micro-batch a no-op — files staged by the retry stay unreferenced
     and fall to vacuum). ``staged_part_col`` is the physical partition
     column the executors day-split against (None = staged untagged)."""
-    from data_warehouse_copy_spark.sources.managed_table import (
-        FileEntry,
-        ManagedTable,
-        _lock_for,
-        _phys_map as _pm,
-    )
-
     t = ManagedTable.create(None, root)  # no-op when the table exists
     staged = _staged_files(messages)
     entries = tuple(
@@ -1531,41 +1524,31 @@ def _commit_staged(
         # An empty OVERWRITE still commits: it is a legitimate truncate.
         return
     with _lock_for(t.root):
-        b = t._bounded_ingest_base()
-        if b is not None and b[1] is not None:
-            # bounded declarative ingest (session-less twin of the native
-            # bounded append/overwrite): header state folds in O(tail)
-            # memory, the commit is an add-only action diff (overwrite:
-            # plus the O(1) remove_all marker), and the streamed
-            # checkpoint cadence works without a SparkSession (pyarrow)
-            head, schema_json, txns, part_col, _cl, _bl, columns, constraints = b
-            _check_writable_fields(
-                part_col, schema_json, schema, staged_part_col == part_col
-            )
-            if txn is not None and txns.get(txn[0], -1) >= txn[1]:
-                return  # retried micro-batch: already committed
-            _enforce_staged_constraints(
-                rootp, staged, constraints, _pm(columns), schema
-            )
-            if op == "overwrite":
-                t._commit_bounded(
-                    head, entries, set(), "overwrite", txn=txn,
-                    remove_all=True,
-                )
-            else:
-                t._commit_bounded(head, entries, set(), "append", txn=txn)
-            return
-        m = t.snapshot()
-        _check_writable(m, schema, staged_part_col == m.partition_date_col)
+        # past the planning gate (bounded base) the header state folds in
+        # O(tail) memory and the commit is an add-only action diff
+        # (overwrite: plus the O(1) remove_all marker); the streamed
+        # checkpoint cadence works without a SparkSession (pyarrow)
+        b = t._dml_base()
+        _check_writable(b, schema, staged_part_col == b.partition_date_col)
+        if txn is not None and b.txns.get(txn[0], -1) >= txn[1]:
+            return  # retried micro-batch: already committed
         _enforce_staged_constraints(
-            rootp, staged, m.constraints, _pm(m.columns), schema
+            rootp, staged, b.constraints, _phys_map(b.columns), schema
         )
-        commit_schema = schema.json() if not m.schema_json else None
-        if op == "overwrite":
-            t._commit_files(m, entries, commit_schema, "overwrite", txn=txn)
-        else:
+        commit_schema = schema.json() if not b.schema_json else None
+        if op == "overwrite" and b.manifest is None:
+            t._commit_bounded(
+                b.version, entries, set(), "overwrite", txn=txn,
+                remove_all=True,
+            )
+        elif op == "overwrite":
             t._commit_files(
-                m, tuple(m.files) + entries, commit_schema, "append", txn=txn
+                b.manifest, entries, commit_schema, "overwrite", txn=txn
+            )
+        else:
+            t._commit_diff(
+                b, (), set(), entries, "append",
+                schema_json=commit_schema, txn=txn,
             )
     # post-commit auto-compaction (opt-in; no-op without a policy) —
     # outside the commit lock, pyarrow-only so this session-less hook
@@ -1605,15 +1588,7 @@ def _commit_merge(
     instead of collecting. Concurrency: the optimistic entry-equality
     commit guard rejects a racing DML on the same files cleanly."""
     import numpy as np
-    import pyarrow as pa
     import pyarrow.parquet as pq
-
-    from data_warehouse_copy_spark.sources.managed_table import (
-        FileEntry,
-        ManagedTable,
-        _file_may_match,
-        _lock_for,
-    )
 
     if key not in {f.name for f in schema.fields}:
         raise ValueError(
@@ -1630,17 +1605,14 @@ def _commit_merge(
         for fc in staged
     )
     with _lock_for(t.root):
-        m = t.snapshot()
-        _check_writable(m, schema, staged_part_col == m.partition_date_col)
-        from data_warehouse_copy_spark.sources.managed_table import _phys_map as _pm0
-
+        base = t._dml_base()
+        _check_writable(base, schema, staged_part_col == base.partition_date_col)
         _enforce_staged_constraints(
-            rootp, staged, m.constraints, _pm0(m.columns), schema
+            rootp, staged, base.constraints, _phys_map(base.columns), schema
         )
-        commit_schema = schema.json() if not m.schema_json else None
-        # staged files and manifest stats both carry PHYSICAL names
-        from data_warehouse_copy_spark.sources.managed_table import _phys_map as _pm
-        key_phys = (_pm(m.columns) or {}).get(key, key)
+        commit_schema = schema.json() if not base.schema_json else None
+        # staged files carry PHYSICAL names
+        key_phys = (_phys_map(base.columns) or {}).get(key, key)
         keys: set = set()
         for e in entries:
             keys |= set(
@@ -1649,32 +1621,31 @@ def _commit_merge(
                 .to_pylist()
             )
         keys.discard(None)
-        if not keys:
-            # empty source still commits + completes the unit
-            # (TableUpdateService.cs:167-172)
-            t._commit_files(m, tuple(m.files) + entries, commit_schema, "merge")
-            return
-        key_arr = np.array(sorted(keys))
-        lo, hi = key_arr[0].item(), key_arr[-1].item()
-        candidates = [
-            f
-            for f in m.files
-            if _file_may_match(f.stats, key_phys, ">=", lo)
-            and _file_may_match(f.stats, key_phys, "<=", hi)
-        ]
-        per_file, pos_chunks = _harvest_positions(
-            rootp,
-            candidates,
-            [key_phys],
-            lambda tb: np.isin(
-                tb.column(key_phys).to_numpy(zero_copy_only=False), key_arr
-            ),
+        changed, removed = (), set()
+        if keys:
+            key_arr = np.array(sorted(keys))
+            candidates = t._where_candidates(
+                base,
+                [(key, ">=", key_arr[0].item()), (key, "<=", key_arr[-1].item())],
+            )
+            per_file, pos_chunks = _harvest_positions(
+                rootp,
+                candidates,
+                [key_phys],
+                lambda tb: np.isin(
+                    tb.column(key_phys).to_numpy(zero_copy_only=False), key_arr
+                ),
+            )
+            changed, removed = _regrow_dv(
+                candidates,
+                _write_dv_sessionless(rootp, pos_chunks) if per_file else None,
+                per_file,
+            )
+        # an empty source still commits + completes the unit
+        # (TableUpdateService.cs:167-172)
+        t._commit_diff(
+            base, changed, removed, entries, "merge", schema_json=commit_schema
         )
-        files = tuple(m.files)
-        if per_file:
-            dv_files = _write_dv_sessionless(rootp, pos_chunks)
-            files = ManagedTable._grow_dv(m.files, dv_files, per_file)
-        t._commit_files(m, files + entries, commit_schema, "merge")
 
 
 def _harvest_positions(
@@ -1789,13 +1760,6 @@ def _commit_replace_where(
     the predicate (checked against the staged files' predicate columns
     — Delta's constraint, otherwise a retried backfill deletes rows the
     first attempt inserted outside the slice)."""
-    from data_warehouse_copy_spark.sources.managed_table import (
-        FileEntry,
-        ManagedTable,
-        _file_may_match,
-        _lock_for,
-    )
-
     where = _parse_where_option({"where": where_opt})
     if not where:
         raise ValueError(
@@ -1824,7 +1788,7 @@ def _commit_replace_where(
     where_phys = _map_where(where, _phys_map(t._columns_at())) or where
     pred_cols = sorted({c for c, _, _ in where_phys})
 
-    def _staged_satisfy(_schema_json):
+    def _staged_satisfy():
         for e in entries:
             pdf = pq.read_table(
                 str(rootp / e.path), columns=pred_cols
@@ -1838,71 +1802,32 @@ def _commit_replace_where(
                 )
 
     with _lock_for(t.root):
-        b = t._bounded_ingest_base()
-        if b is not None and b[1] is not None:
-            # bounded declarative replaceWhere: candidates come from the
-            # session-less streamed plan (stats+bloom tiers over the
-            # checkpoint, O(batch) memory), the commit is an O(touched)
-            # action diff — no full file list, no SparkSession
-            head, schema_json, _txns, part_col, _cl, _bl, columns, constraints = b
-            _check_writable_fields(
-                part_col, schema_json, schema, staged_part_col == part_col
-            )
-            _enforce_staged_constraints(
-                rootp, staged, constraints, _phys_map(columns), schema
-            )
-            _staged_satisfy(schema_json)
-            planned = t._plan_distributed(
-                head, None, None, None, where, keep_stats=True
-            )
-            if planned is not None:
-                sel = planned[0]
-                per_file, pos_chunks = _harvest_positions(
-                    rootp,
-                    sel,
-                    pred_cols,
-                    lambda tb: _pd_where_mask(tb.to_pandas(), where_phys),
-                )
-                changed: tuple = ()
-                removed: set = set()
-                if per_file:
-                    dv_files = _write_dv_sessionless(rootp, pos_chunks)
-                    changed, removed = ManagedTable._regrow_planned(
-                        sel, dv_files, per_file
-                    )
-                t._commit_bounded(
-                    head, changed + entries, removed, "replace_where"
-                )
-                return
-        m = t.snapshot()
-        _check_writable(m, schema, staged_part_col == m.partition_date_col)
+        # past the planning gate (bounded base) candidates come from the
+        # session-less streamed plan (stats+bloom tiers over the
+        # checkpoint, O(batch) memory) and the commit is an O(touched)
+        # action diff — no full file list, no SparkSession
+        base = t._dml_base()
+        _check_writable(base, schema, staged_part_col == base.partition_date_col)
         _enforce_staged_constraints(
-            rootp, staged, m.constraints, _phys_map(m.columns), schema
+            rootp, staged, base.constraints, _phys_map(base.columns), schema
         )
-        commit_schema = schema.json() if not m.schema_json else None
-        _staged_satisfy(m.schema_json)
-        candidates = [
-            f
-            for f in m.files
-            if all(
-                _file_may_match(f.stats, c, op, v) for c, op, v in where_phys
-            )
-        ]
-        if m.bloom_cols:
-            from data_warehouse_copy_spark.sources.bloom import bloom_prune
-
-            candidates = bloom_prune(rootp, candidates, where_phys)
+        _staged_satisfy()
+        candidates = t._where_candidates(base, where)
         per_file, pos_chunks = _harvest_positions(
             rootp,
             candidates,
             pred_cols,
             lambda tb: _pd_where_mask(tb.to_pandas(), where_phys),
         )
-        files = tuple(m.files)
-        if per_file:
-            dv_files = _write_dv_sessionless(rootp, pos_chunks)
-            files = ManagedTable._grow_dv(m.files, dv_files, per_file)
-        t._commit_files(m, files + entries, commit_schema, "replace_where")
+        changed, removed = _regrow_dv(
+            candidates,
+            _write_dv_sessionless(rootp, pos_chunks) if per_file else None,
+            per_file,
+        )
+        t._commit_diff(
+            base, changed, removed, entries, "replace_where",
+            schema_json=schema.json() if not base.schema_json else None,
+        )
 
 
 def _abort_staged(root: str, messages) -> None:

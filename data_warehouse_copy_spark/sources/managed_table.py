@@ -30,9 +30,10 @@ Scale design (the 100 TB story):
   data files, and a range *reload* writes only the window's partitions.
 - **merge is join-based**: the changed-key upsert (reference O9/O10's
   2000-key ``IN``-list batches, ``TableUpdateService.cs:110-161``) becomes
-  one ``left_anti`` join + union that rewrites only the partitions
-  containing affected keys — no driver-side key materialization (avoids
-  reference O8 collect), no per-batch round trips.
+  one semi-join that tombstones the matched rows in a deletion vector
+  plus an append of the source rows — no data file rewritten, no
+  driver-side key materialization (avoids reference O8 collect), no
+  per-batch round trips.
 - readers get an explicit pruned file list, so Spark never lists or reads
   dead files; the parquet scan keeps predicate pushdown and column pruning.
 
@@ -55,6 +56,7 @@ last-commit-wins would silently lose data.
 
 from __future__ import annotations
 
+import functools
 import json
 import logging
 import os
@@ -225,6 +227,26 @@ class CommitInfo:
     total_rows: int
     rows_added: int
     rows_removed: int
+
+
+@dataclass(frozen=True)
+class _DmlBase:
+    """The table state one write plans and commits against (see
+    :meth:`ManagedTable._dml_base`). ``manifest`` is the full snapshot on
+    the CLASSIC backend (driver-side planning, :meth:`ManagedTable.
+    _commit_files`); None on the BOUNDED backend, whose fields fold from
+    the parquet checkpoint header plus the action tail in O(tail) memory
+    (Spark-job planning, :meth:`ManagedTable._commit_bounded`)."""
+
+    version: int
+    schema_json: str | None
+    txns: dict
+    partition_date_col: str | None
+    cluster_col: str | list | None
+    bloom_cols: list | None
+    columns: list | None
+    constraints: dict | None
+    manifest: Manifest | None = None
 
 
 # Per-process cache of the most recently reconstructed manifest per table
@@ -598,6 +620,47 @@ def _dv_delta_positions(root, dv_paths, data_path: str) -> "set | None":
             if fp == data_path:
                 out.add(pos)
     return out
+
+
+@functools.lru_cache(maxsize=1 << 16)
+def _dv_file_columns(path: str) -> "tuple[str, ...]":
+    """Footer column names of one deletion-vector parquet. DV files are
+    immutable once written, so each is read at most once per process."""
+    return tuple(pq.read_schema(path).names)
+
+
+def _regrow_dv(
+    candidates: list, dv_files: "tuple | None", per_file: dict
+) -> "tuple[tuple, set]":
+    """Re-version the ``candidates`` whose positions a new deletion
+    vector tombstones, as an action diff ``(changed entries, removed
+    paths)`` — ``((), set())`` when ``dv_files`` is None (nothing
+    matched). Entries whose every row is now deleted leave the manifest
+    outright (their bytes and DVs become vacuum's problem). Every
+    ``per_file`` key MUST name a candidate: a key that matches none (a
+    path-arithmetic drift between the URI Spark rendered and the
+    manifest's relative path) would report "n rows deleted" while the
+    commit attached no DV — rows silently surviving. Loud failure
+    instead."""
+    if dv_files is None:
+        return (), set()
+    by_path = {f.path: f for f in candidates}
+    stray = sorted(set(per_file) - set(by_path))
+    if stray:
+        raise RuntimeError(
+            f"deletion-vector accounting references {len(stray)} path(s) "
+            f"outside the candidate files (first: {stray[0]!r}); refusing "
+            f"to commit a delete that would silently drop its DV"
+        )
+    changed = []
+    for rel, n in per_file.items():
+        f = by_path[rel]
+        nf = _dc_replace(
+            f, dv_paths=f.dv_paths + dv_files, dv_rows=f.dv_rows + n
+        )
+        if nf.dv_rows < nf.rows:
+            changed.append(nf)
+    return tuple(changed), set(per_file)
 
 
 class ManagedTable:
@@ -1636,6 +1699,22 @@ class ManagedTable:
             v -= 1
         return None
 
+    def _bounded_plan_base(
+        self, version: int
+    ) -> "tuple[Path, dict, list[dict]] | None":
+        """:meth:`_plan_base` when its checkpoint holds at least
+        ``_DISTRIBUTED_PLAN_MIN_FILES`` entries, else None — the one gate
+        between the classic (driver-side) and bounded (checkpoint-backed)
+        backends, shared by read planning, every write (via
+        :meth:`_dml_base`), ``count`` and ``vacuum``."""
+        base = self._plan_base(version)
+        if base is None or (
+            pq.ParquetFile(base[0]).metadata.num_rows
+            < _DISTRIBUTED_PLAN_MIN_FILES
+        ):
+            return None
+        return base
+
     #: Spark-side schema of one manifest row (manifest-as-data surface)
     _MANIFEST_ROW_SCHEMA = (
         "path string, partition string, rows long, stats_json string, "
@@ -1743,15 +1822,11 @@ class ManagedTable:
         the same three tiers over pyarrow record batches of the
         checkpoint, single-threaded but memory-bounded — O(batch +
         survivors), never the full manifest."""
-        import pyarrow.parquet as pq
-
         v = version if version is not None else self._head_version()
-        base = self._plan_base(v)
+        base = self._bounded_plan_base(v)
         if base is None:
             return None
         ck, header, actions = base
-        if pq.ParquetFile(ck).metadata.num_rows < _DISTRIBUTED_PLAN_MIN_FILES:
-            return None
         touched, adds, wiped = _fold_tail(actions)
         schema_json = header.get("schema_json")
         bloom_cols = header.get("bloom_cols")
@@ -1939,15 +2014,11 @@ class ManagedTable:
         change between 10^5 and 10^8. Returns None below the gate (small
         tables keep the native JVM parquet scan, which is faster per
         byte) or when no parquet checkpoint / schema exists."""
-        import pyarrow.parquet as pq
-
         v = version if version is not None else self._head_version()
-        base = self._plan_base(v)
+        base = self._bounded_plan_base(v)
         if base is None or self.spark is None:
             return None
-        ck, header, actions = base
-        if pq.ParquetFile(ck).metadata.num_rows < _DISTRIBUTED_PLAN_MIN_FILES:
-            return None
+        _ck, header, actions = base
         schema_json = header.get("schema_json")
         tbl_columns = header.get("columns")
         for raw in actions:
@@ -2188,7 +2259,21 @@ class ManagedTable:
         session-less pyarrow twin): declaring it here skips parquet
         schema inference — a per-call footer-open round trip that every
         DV-bearing read, delete, merge and CDF plan was paying (round-15;
-        on an object store that inference is a remote GET per plan)."""
+        on an object store that inference is a remote GET per plan). A
+        declared schema reads a DRIFTED column name as all-NULL, though,
+        and a NULL ``file_path``/``pos`` silently resurrects every row the
+        DV deletes — so each DV file's footer names are checked against
+        the declaration, once per process per (immutable) DV file, on the
+        driver with pyarrow: no Spark job."""
+        want = ("file_uri", "file_path", "pos")
+        for p in dv_paths:
+            have = _dv_file_columns(str(self.root / p))
+            if not set(want) <= set(have):
+                raise RuntimeError(
+                    f"deletion-vector file {p!r} has columns {list(have)}, "
+                    f"not {list(want)}; refusing to read it (its deleted "
+                    f"rows would silently come back)"
+                )
         raw = self.spark.read.schema(
             "file_uri string, file_path string, pos long"
         ).parquet(*[str(self.root / p) for p in dv_paths])
@@ -2235,16 +2320,10 @@ class ManagedTable:
         action tail — touched checkpoint entries are looked up with one
         dictionary-filtered (O(touched)) read of the checkpoint parquet,
         never the full list."""
-        base = self._plan_base(self._head_version())
+        base = self._bounded_plan_base(self._head_version())
         if base is not None:
-            import pyarrow.parquet as pq
-
             ck, header, actions = base
-            if (
-                "total_rows" in header
-                and pq.ParquetFile(ck).metadata.num_rows
-                >= _DISTRIBUTED_PLAN_MIN_FILES
-            ):
+            if "total_rows" in header:
                 total = int(header["total_rows"])
                 touched, adds, wiped = _fold_tail(actions)
                 if wiped:
@@ -2750,50 +2829,45 @@ class ManagedTable:
 
     # ---------------------------------------------------------------- write
 
-    def _bounded_ingest_base(self):
-        """Ingest-side bounded gate: the state an append/overwrite/
-        replace/merge needs — ``(head_version, schema_json, txns,
-        partition_date_col, cluster_col, bloom_cols, columns)`` — folded from the
-        nearest parquet checkpoint header plus the action tail, in
-        O(tail) driver memory, when that checkpoint holds at least
-        ``_DISTRIBUTED_PLAN_MIN_FILES`` entries. ``None`` below the gate
-        (classic snapshot-based path is cheaper there)."""
-        import pyarrow.parquet as pq
-
+    def _dml_base(self) -> _DmlBase:
+        """The state a write plans and commits against, with its backend
+        chosen here and nowhere else: BOUNDED (header + tail folded in
+        O(tail) memory, ``manifest`` None) when
+        :meth:`_bounded_plan_base` admits the head and the folded state
+        carries a schema; otherwise CLASSIC, the full :meth:`snapshot`."""
         head = self._head_version()
-        base = self._plan_base(head)
-        if base is None:
-            return None
-        ck, header, actions = base
-        if pq.ParquetFile(ck).metadata.num_rows < _DISTRIBUTED_PLAN_MIN_FILES:
-            return None
-        schema_json = header.get("schema_json")
-        cluster_col = header.get("cluster_col")
-        txns = dict(header.get("txns") or {})
-        columns = header.get("columns")
-        constraints = header.get("constraints")
-        for raw in actions:
-            if raw.get("schema_json"):
-                schema_json = raw["schema_json"]
-            if raw.get("columns") is not None:
-                # explicit [] = mapping cleared (restore to a pre-mapping
-                # version); absent key = inherit
-                columns = raw["columns"] or None
-            if raw.get("constraints") is not None:
-                constraints = raw["constraints"] or None
-            if raw.get("txn"):
-                txns[str(raw["txn"][0])] = raw["txn"][1]
-            if "cluster_col_change" in raw:
-                cluster_col = raw["cluster_col_change"][0]
-        return (
-            head,
-            schema_json,
-            txns,
-            header.get("partition_date_col"),
-            cluster_col,
-            header.get("bloom_cols"),
-            columns,
-            constraints,
+        base = self._bounded_plan_base(head)
+        if base is not None:
+            _ck, header, actions = base
+            schema_json = header.get("schema_json")
+            cluster_col = header.get("cluster_col")
+            txns = dict(header.get("txns") or {})
+            columns = header.get("columns")
+            constraints = header.get("constraints")
+            for raw in actions:
+                if raw.get("schema_json"):
+                    schema_json = raw["schema_json"]
+                if raw.get("columns") is not None:
+                    # explicit [] = mapping cleared (restore to a
+                    # pre-mapping version); absent key = inherit
+                    columns = raw["columns"] or None
+                if raw.get("constraints") is not None:
+                    constraints = raw["constraints"] or None
+                if raw.get("txn"):
+                    txns[str(raw["txn"][0])] = raw["txn"][1]
+                if "cluster_col_change" in raw:
+                    cluster_col = raw["cluster_col_change"][0]
+            if schema_json is not None:
+                return _DmlBase(
+                    head, schema_json, txns,
+                    header.get("partition_date_col"), cluster_col,
+                    header.get("bloom_cols"), columns, constraints,
+                )
+        m = self.snapshot()
+        return _DmlBase(
+            m.version, m.schema_json, dict(m.txns or {}),
+            m.partition_date_col, m.cluster_col, m.bloom_cols, m.columns,
+            m.constraints, m,
         )
 
     def _append_with_identity(
@@ -3046,81 +3120,48 @@ class ManagedTable:
         presents the same epoch and is skipped instead of double-written
         (Delta's txnAppId/txnVersion pattern)."""
         with _lock_for(self.root):
-            b = self._bounded_ingest_base()
-            if b is not None and b[1] is not None:
-                # bounded ingest (the last O(live files) write path, VERDICT
-                # r6 item 1): schema checks run against the folded header
-                # state, the commit is a pure add-action diff, and txn
-                # idempotency re-checks inside the conflict-rebase loop —
-                # the full file list is never materialized
-                head, schema_json, txns, part_col, cluster_col, bloom_cols, columns, constraints = b
-                if txn is not None and txns.get(txn[0], -1) >= txn[1]:
-                    return 0  # retried transaction: already committed
-                id_specs = _identity_specs(schema_json)
-                if id_specs:
-                    return self._append_with_identity(
-                        df, id_specs, merge_schema, txn,
-                        cluster_partitions, copy_sources,
-                        copy_ledger_version,
-                    )
-                df, widened = self._align_append_df(df, schema_json, merge_schema)
-                df = self._enforce_constraints(df, constraints, "append")
-                new_cols = (
-                    _extend_columns(columns, df.schema.json())
-                    if widened
+            # past the planning gate (bounded base) the schema checks run
+            # against the folded header state and the commit is a pure
+            # add-action diff — the full file list is never materialized
+            b = self._dml_base()
+            if txn is not None and b.txns.get(txn[0], -1) >= txn[1]:
+                return 0  # retried transaction: already committed
+            id_specs = _identity_specs(b.schema_json)
+            if id_specs:
+                return self._append_with_identity(
+                    df, id_specs, merge_schema, txn,
+                    cluster_partitions, copy_sources,
+                    copy_ledger_version,
+                )
+            df, widened = self._align_append_df(df, b.schema_json, merge_schema)
+            df = self._enforce_constraints(df, b.constraints, "append")
+            new_cols = (
+                _extend_columns(b.columns, df.schema.json())
+                if widened
+                else None
+            )
+            new_files = self._write_files(
+                df, b.partition_date_col, b.cluster_col,
+                cluster_partitions=cluster_partitions,
+                bloom_cols=b.bloom_cols,
+                columns=new_cols if new_cols is not None else b.columns,
+            )
+            # Only a genuine widen (or first write) updates the manifest
+            # schema; a same-shape append keeps the table's canonical JSON
+            # (the incoming frame's serialization may differ in nullability
+            # only, and drifting the stored text would read as spurious
+            # schema changes to concurrent writers).
+            committed = self._commit_diff(
+                b, (), set(), new_files, "append",
+                schema_json=(
+                    df.schema.json()
+                    if (b.schema_json is None or widened)
                     else None
-                )
-                new_files = self._write_files(
-                    df, part_col, cluster_col,
-                    cluster_partitions=cluster_partitions,
-                    bloom_cols=bloom_cols,
-                    columns=new_cols if new_cols is not None else columns,
-                )
-                committed = self._commit_bounded(
-                    head, new_files, set(), "append", txn=txn,
-                    schema_json=df.schema.json() if widened else None,
-                    columns=new_cols, copy_sources=copy_sources,
-                    copy_ledger_version=copy_ledger_version,
-                )
-                n = sum(f.rows for f in new_files) if committed else 0
-            else:
-                m = self.snapshot()
-                if txn is not None and (m.txns or {}).get(txn[0], -1) >= txn[1]:
-                    return 0  # retried transaction: already committed
-                id_specs = _identity_specs(m.schema_json)
-                if id_specs:
-                    return self._append_with_identity(
-                        df, id_specs, merge_schema, txn,
-                        cluster_partitions, copy_sources,
-                        copy_ledger_version,
-                    )
-                df, widened = self._align_append_df(df, m.schema_json, merge_schema)
-                df = self._enforce_constraints(df, m.constraints, "append")
-                new_cols = (
-                    _extend_columns(m.columns, df.schema.json())
-                    if widened
-                    else None
-                )
-                new_files = self._write_files(
-                    df, m.partition_date_col, m.cluster_col,
-                    cluster_partitions=cluster_partitions,
-                    bloom_cols=m.bloom_cols,
-                    columns=new_cols if new_cols is not None else m.columns,
-                )
-                # Only a genuine widen (or first write) updates the manifest
-                # schema; a same-shape append keeps the table's canonical JSON
-                # (the incoming frame's serialization may differ in nullability
-                # only, and drifting the stored text would read as spurious
-                # schema changes to concurrent writers).
-                commit_schema = (
-                    df.schema.json() if (m.schema_json is None or widened) else None
-                )
-                committed = self._commit_files(
-                    m, tuple(m.files) + new_files, commit_schema, "append",
-                    txn=txn, columns=new_cols, copy_sources=copy_sources,
-                    copy_ledger_version=copy_ledger_version,
-                )
-                n = sum(f.rows for f in new_files) if committed else 0
+                ),
+                txn=txn, columns=new_cols, copy_sources=copy_sources,
+                copy_ledger_version=copy_ledger_version,
+            )
+            n = sum(f.rows for f in new_files) if committed else 0
         if n:
             # post-commit auto-compaction (opt-in; a no-op without a
             # policy): OUTSIDE the append lock — the ingest is already
@@ -3502,11 +3543,8 @@ class ManagedTable:
         """``(head_version, schema_json, columns)`` for an evolution
         commit — folded boundedly past the planning gate, via snapshot
         below it (small tables)."""
-        b = self._bounded_ingest_base()
-        if b is not None and b[1] is not None:
-            return b[0], b[1], b[6]
-        m = self.snapshot()
-        return m.version, m.schema_json, m.columns
+        b = self._dml_base()
+        return b.version, b.schema_json, b.columns
 
     def rename_column(self, old: str, new: str) -> None:
         """Rename a column — METADATA-ONLY, at any table size (the Delta
@@ -4225,14 +4263,10 @@ class ManagedTable:
             entry = next(
                 c for c in cols if c["name"] == name and not c.get("dropped")
             )
-            b = self._bounded_ingest_base()
-            if b is not None and b[1] is not None:
-                part_col, cluster_col, bloom_cols = b[3], b[4], b[5]
-            else:
-                m = self.snapshot()
-                part_col, cluster_col, bloom_cols = (
-                    m.partition_date_col, m.cluster_col, m.bloom_cols
-                )
+            b = self._dml_base()
+            part_col, cluster_col, bloom_cols = (
+                b.partition_date_col, b.cluster_col, b.bloom_cols
+            )
             phys = entry["physical"]
             cluster_list = (
                 [cluster_col] if isinstance(cluster_col, str)
@@ -4269,46 +4303,38 @@ class ManagedTable:
         a deterministic layout — e.g. one file per inverted list for an
         IVF index table — instead of AQE's size-based coalescing."""
         with _lock_for(self.root):
-            b = self._bounded_ingest_base()
-            if b is not None:
+            b = self._dml_base()
+            df = self._enforce_constraints(df, b.constraints, "overwrite")
+            new_files = self._write_files(
+                df, b.partition_date_col, b.cluster_col,
+                cluster_partitions=cluster_partitions,
+                bloom_cols=b.bloom_cols,
+                columns=b.columns,
+            )
+            if b.manifest is None:
                 # bounded truncate-and-load: the action records an O(1)
                 # ``remove_all`` marker instead of every removed path —
                 # replay clears state at that action, so even replacing a
                 # 10^6-file table writes a KB-sized commit. Never rebases
                 # (see _commit_bounded): a racer's commit during the
                 # overwrite is a clean rejection, not silent erasure.
-                head, schema_json, _txns, part_col, cluster_col, bloom_cols, columns, constraints = b
-                df = self._enforce_constraints(df, constraints, "overwrite")
-                new_files = self._write_files(
-                    df, part_col, cluster_col,
-                    cluster_partitions=cluster_partitions,
-                    bloom_cols=bloom_cols,
-                    columns=columns,
-                )
                 self._commit_bounded(
-                    head, new_files, set(), "overwrite",
+                    b.version, new_files, set(), "overwrite",
                     schema_json=(
                         df.schema.json()
-                        if _schema_fp(df.schema.json()) != _schema_fp(schema_json)
+                        if _schema_fp(df.schema.json()) != _schema_fp(b.schema_json)
                         else None
                     ),
                     remove_all=True,
                 )
-                return sum(f.rows for f in new_files)
-            m = self.snapshot()
-            df = self._enforce_constraints(df, m.constraints, "overwrite")
-            new_files = self._write_files(
-                df, m.partition_date_col, m.cluster_col,
-                cluster_partitions=cluster_partitions,
-                bloom_cols=m.bloom_cols,
-                columns=m.columns,
-            )
-            self._commit_files(m, new_files, df.schema.json(), "overwrite")
+            else:
+                self._commit_files(
+                    b.manifest, new_files, df.schema.json(), "overwrite"
+                )
         return sum(f.rows for f in new_files)
 
     def replace_where(
-        self, df: DataFrame, where: list[tuple], strategy: str = "dv",
-        validate: bool = True,
+        self, df: DataFrame, where: list[tuple], validate: bool = True,
     ) -> tuple[int, int]:
         """Atomic predicate-scoped overwrite — Delta's ``replaceWhere``,
         the general form of :meth:`overwrite_range` (which covers day
@@ -4320,33 +4346,20 @@ class ManagedTable:
         predicate, silently diverging). Returns ``(rows_deleted,
         rows_inserted)``.
 
-        The delete side stats+bloom-prunes candidates exactly like
-        :meth:`delete`; ``strategy="dv"`` (default) tombstones matched
-        positions merge-on-read — replacing a k-row slice of a huge file
-        costs O(k) positions + the new data, never a rewrite —
-        ``strategy="cow"`` rewrites candidate survivors."""
+        The delete side prunes candidates exactly like :meth:`delete` and
+        tombstones matched positions in a deletion vector (merge-on-read)
+        — replacing a k-row slice of a huge file costs O(k) positions +
+        the new data, never a rewrite; :meth:`compact` folds the DVs."""
         if not where:
             raise ValueError(
                 "replace_where() requires a predicate; use overwrite() "
                 "to truncate-and-load"
             )
-        if strategy not in ("dv", "cow"):
-            raise ValueError(
-                f"replace_where strategy must be 'dv' or 'cow', got {strategy!r}"
-            )
         pred = _where_predicate(where)
         with _lock_for(self.root):
-            if strategy == "dv":
-                b = self._bounded_ingest_base()
-                if b is not None and b[1] is not None:
-                    out = self._replace_where_bounded(
-                        df, where, pred, b, validate=validate
-                    )
-                    if out is not None:
-                        return out
-            m = self.snapshot()
-            if m.schema_json:
-                existing = T.StructType.fromJson(json.loads(m.schema_json))
+            base = self._dml_base()
+            if base.schema_json:
+                existing = T.StructType.fromJson(json.loads(base.schema_json))
                 have, want = set(df.columns), {f.name for f in existing.fields}
                 if have != want:
                     raise ValueError(
@@ -4369,121 +4382,22 @@ class ManagedTable:
                         f"replacement must be confined to the slice it "
                         f"replaces"
                     )
-            df = self._enforce_constraints(df, m.constraints, "replace_where")
-            wp = _map_where(where, _phys_map(m.columns)) or []
-            candidates = [
-                f
-                for f in m.files
-                if all(_file_may_match(f.stats, c, op, v) for c, op, v in wp)
-            ]
-            if m.bloom_cols:
-                from data_warehouse_copy_spark.sources.bloom import bloom_prune
-
-                candidates = bloom_prune(self.root, candidates, wp)
+            df = self._enforce_constraints(df, base.constraints, "replace_where")
+            candidates = self._where_candidates(base, where)
             new_files = self._write_files(
-                df, m.partition_date_col, m.cluster_col,
-                bloom_cols=m.bloom_cols,
-                columns=m.columns,
+                df, base.partition_date_col, base.cluster_col,
+                bloom_cols=base.bloom_cols,
+                columns=base.columns,
             )
-            n_ins = sum(f.rows for f in new_files)
-            schema_json = m.schema_json or df.schema.json()
-            if not candidates:
-                self._commit_files(
-                    m, tuple(m.files) + new_files, schema_json, "replace_where",
-                    read_spans=_where_read_spans(where, m.columns),
-                )
-                return (0, n_ins)
-            if strategy == "dv":
-                hits = self._scan_with_pos(m, candidates).filter(pred)
-                dv_files, per_file = self._write_dv(hits)
-                if dv_files is None:
-                    files, n_del = tuple(m.files), 0
-                else:
-                    files = self._grow_dv(m.files, dv_files, per_file)
-                    n_del = sum(per_file.values())
-                self._commit_files(
-                    m, files + new_files, schema_json, "replace_where",
-                    read_spans=_where_read_spans(where, m.columns),
-                )
-                return (n_del, n_ins)
-            cand_df = self._scan_with_pos(m, candidates)
-            n_del = cand_df.filter(pred).count()
-            if n_del == 0:
-                self._commit_files(
-                    m, tuple(m.files) + new_files, schema_json, "replace_where",
-                    read_spans=_where_read_spans(where, m.columns),
-                )
-                return (0, n_ins)
-            survivors = cand_df.filter(~F.coalesce(pred, F.lit(False))).drop(
-                "__dwcs_uri", "__dwcs_pos"
+            changed, removed, n_del = self._tombstone(
+                base, candidates, lambda scan: scan.filter(pred)
             )
-            rewritten = self._write_files(
-                survivors, m.partition_date_col, m.cluster_col,
-                bloom_cols=m.bloom_cols,
-                columns=m.columns,
+            self._commit_diff(
+                base, changed, removed, new_files, "replace_where",
+                schema_json=None if base.schema_json else df.schema.json(),
+                read_spans=_where_read_spans(where, base.columns),
             )
-            cand_paths = {c.path for c in candidates}
-            kept = tuple(f for f in m.files if f.path not in cand_paths)
-            self._commit_files(
-                m, kept + rewritten + new_files, schema_json, "replace_where",
-                read_spans=_where_read_spans(where, m.columns),
-            )
-            return (n_del, n_ins)
-
-    def _replace_where_bounded(
-        self, df: DataFrame, where: list[tuple], pred, b,
-        validate: bool = True,
-    ) -> "tuple[int, int] | None":
-        """Bounded DV replace_where: delete-side candidates come from the
-        distributed plan (stats retained), the insert side appends, and
-        the commit is an O(touched) action diff — the full file list is
-        never materialized. ``None`` → caller falls through to classic
-        (the plan gate raced shut)."""
-        head, schema_json, _txns, part_col, cluster_col, bloom_cols, columns, constraints = b
-        existing = T.StructType.fromJson(json.loads(schema_json))
-        have, want = set(df.columns), {f.name for f in existing.fields}
-        if have != want:
-            raise ValueError(
-                f"replace_where schema mismatch: table has "
-                f"{sorted(want)}, dataframe has {sorted(have)}"
-            )
-        df = df.select(*[f.name for f in existing.fields])
-        df = self._enforce_constraints(df, constraints, "replace_where")
-        if validate:
-            n_bad = df.filter(~F.coalesce(pred, F.lit(False))).count()
-            if n_bad:
-                raise ValueError(
-                    f"replace_where: {n_bad} incoming rows do not "
-                    f"satisfy the predicate {where!r} — the replacement "
-                    f"must be confined to the slice it replaces"
-                )
-        planned = self._plan_distributed(
-            head, None, None, None, where, keep_stats=True
-        )
-        if planned is None:
-            return None
-        sel, plan_schema, plan_columns = planned
-        new_files = self._write_files(
-            df, part_col, cluster_col, bloom_cols=bloom_cols,
-            columns=columns,
-        )
-        n_ins = sum(f.rows for f in new_files)
-        if not sel:
-            self._commit_bounded(head, new_files, set(), "replace_where", read_spans=_where_read_spans(where, columns))
-            return (0, n_ins)
-        hits = self._scan_with_pos(
-            None, sel, schema_json=plan_schema
-        ).filter(pred)
-        dv_files, per_file = self._write_dv(hits)
-        if dv_files is None:
-            self._commit_bounded(head, new_files, set(), "replace_where", read_spans=_where_read_spans(where, columns))
-            return (0, n_ins)
-        changed, removed = self._regrow_planned(sel, dv_files, per_file)
-        self._commit_bounded(
-            head, changed + new_files, removed, "replace_where",
-            read_spans=_where_read_spans(where, columns),
-        )
-        return (sum(per_file.values()), n_ins)
+            return (n_del, sum(f.rows for f in new_files))
 
     def overwrite_range(
         self, df: DataFrame, date_from: str, date_to: str, date_column: str | None = None
@@ -4654,124 +4568,121 @@ class ManagedTable:
             )
         return deleted, sum(f.rows for f in new_files)
 
-    def delete(self, where: list[tuple], strategy: str = "dv") -> int:
+    def delete(self, where: list[tuple]) -> int:
         """Row-level predicate DELETE as ONE atomic commit (Delta's
         ``DELETE WHERE``). ``where`` is the same conjunctive
         ``(column, op, value)`` list :meth:`read` takes; rows where the
         conjunction is TRUE are deleted (NULL-predicate rows survive —
         SQL semantics). Returns rows deleted.
 
-        Both strategies stats-prune first: files whose manifest min/max
-        prove no row can match are kept UNTOUCHED, and a candidate set
-        with no actual matches commits a ``delete_noop`` keeping every
-        file byte-identical. Files without usable stats degrade to
-        candidates (a wider touch), never to a wrong answer.
+        Candidates are stats- and bloom-pruned first: files whose
+        manifest min/max prove no row can match are kept UNTOUCHED, and
+        a candidate set with no actual matches commits a ``delete_noop``
+        keeping every file byte-identical. Files without usable stats
+        degrade to candidates (a wider touch), never to a wrong answer.
 
-        ``strategy="dv"`` (default) is MERGE-ON-READ, the Delta
-        deletion-vector / Iceberg position-delete shape: deleting k rows
-        writes an O(k) position file under ``_dv/`` plus metadata — no
-        data file is rewritten, so a 1-row delete from a 1 GB file costs
-        kilobytes instead of a gigabyte of rewrite amplification (the
-        100 TB DML cost). Readers subtract DV'd positions with one
-        anti-join; :meth:`compact` folds accumulated DVs back into clean
-        files. ``strategy="cow"`` is classic copy-on-write — rewrite the
-        candidate files' survivors — the right call when a delete guts
-        most of its candidate files (read amplification would outlast the
-        rewrite)."""
+        The delete is MERGE-ON-READ, the Delta deletion-vector / Iceberg
+        position-delete shape: deleting k rows writes an O(k) position
+        file under ``_dv/`` plus metadata — no data file is rewritten, so
+        a 1-row delete from a 1 GB file costs kilobytes instead of a
+        gigabyte of rewrite amplification (the 100 TB DML cost). Readers
+        subtract DV'd positions with one anti-join; :meth:`compact`
+        folds accumulated DVs back into clean files."""
         if not where:
             raise ValueError(
                 "delete() requires at least one predicate; "
                 "use overwrite() to truncate"
             )
-        if strategy not in ("dv", "cow"):
-            raise ValueError(f"delete strategy must be 'dv' or 'cow', got {strategy!r}")
+        pred = _where_predicate(where)
         with _lock_for(self.root):
-            if strategy == "dv":
-                # bounded path first (the write-side driver ceiling): past
-                # the planning gate, candidates come from the distributed
-                # plan and the commit is O(touched) — the full file list
-                # is never materialized
-                head = self._head_version()
-                planned = self._plan_distributed(
-                    head, None, None, None, where, keep_stats=True
-                )
-                if planned is not None:
-                    return self._delete_dv_bounded(head, planned, where)
-            m = self.snapshot()
-            wp = _map_where(where, _phys_map(m.columns)) or []
-            candidates = [
-                f
-                for f in m.files
-                if all(_file_may_match(f.stats, c, op, v) for c, op, v in wp)
-            ]
-            if m.bloom_cols:
-                from data_warehouse_copy_spark.sources.bloom import bloom_prune
+            base = self._dml_base()
+            changed, removed, n = self._tombstone(
+                base, self._where_candidates(base, where),
+                lambda scan: scan.filter(pred),
+            )
+            # a noop keeps every file byte-identical and reads nothing
+            self._commit_diff(
+                base, changed, removed, (), "delete" if n else "delete_noop",
+                read_spans=_where_read_spans(where, base.columns) if n else None,
+            )
+            return n
 
-                # a point delete touches only the files that may hold the
-                # key — bloom-pruned exactly like the read path
-                candidates = bloom_prune(self.root, candidates, wp)
-            if not candidates:
-                self._commit_files(m, tuple(m.files), m.schema_json, "delete_noop")
-                return 0
-            if strategy == "dv":
-                return self._delete_dv(m, candidates, where)
-            return self._delete_cow(m, candidates, where)
+    def _where_candidates(self, base: _DmlBase, where: list) -> list:
+        """Files of ``base`` that may hold a row matching ``where``:
+        per-file min/max stats, then bloom bitmaps. Bounded: the
+        distributed plan, stats retained (re-versioned entries must keep
+        their pruning power). Classic — or a bounded base whose
+        checkpoint was swept meanwhile — the same tiers over the
+        snapshot at ``base.version``."""
+        if base.manifest is None:
+            planned = self._plan_distributed(
+                base.version, None, None, None, where, keep_stats=True
+            )
+            if planned is not None:
+                return planned[0]
+        m = base.manifest or self.snapshot(base.version)
+        wp = _map_where(where, _phys_map(m.columns)) or []
+        candidates = [
+            f
+            for f in m.files
+            if all(_file_may_match(f.stats, c, op, v) for c, op, v in wp)
+        ]
+        if m.bloom_cols:
+            from data_warehouse_copy_spark.sources.bloom import bloom_prune
 
-    def _delete_dv_bounded(
-        self, base_version: int, planned: tuple, where: list[tuple]
-    ) -> int:
-        """DV delete with O(touched) driver memory: candidates are the
-        distributed plan's survivors (stats retained — the re-versioned
-        entries must keep their pruning power), the DV write is the
-        normal one pass, and the commit is an action-diff that never
-        constructs the full file list (:meth:`_commit_bounded`)."""
-        sel, schema_json, plan_columns = planned
-        if not sel:
-            self._commit_bounded(base_version, (), set(), "delete_noop")
-            return 0
-        hits = self._scan_with_pos(
-            None, sel, schema_json=schema_json, columns=plan_columns
-        ).filter(_where_predicate(where))
-        dv_files, per_file = self._write_dv(hits)
-        if dv_files is None:
-            self._commit_bounded(base_version, (), set(), "delete_noop")
-            return 0
-        changed, removed = self._regrow_planned(sel, dv_files, per_file)
-        self._commit_bounded(
-            base_version, changed, removed, "delete",
-            read_spans=_where_read_spans(where, plan_columns),
+            # a point DML touches only the files that may hold the key —
+            # bloom-pruned exactly like the read path
+            candidates = bloom_prune(self.root, candidates, wp)
+        return candidates
+
+    def _tombstone(
+        self, base: _DmlBase, candidates: list, pick
+    ) -> "tuple[tuple, set, int]":
+        """Deletion-vector the ALIVE rows of ``candidates`` that
+        ``pick(scan)`` keeps (``scan`` carries the file coordinates, see
+        :meth:`_scan_with_pos`), in one DV write. Returns the action diff
+        ``(changed entries, removed paths)`` plus the rows tombstoned —
+        ``((), set(), 0)`` when nothing matched."""
+        if not candidates:
+            return (), set(), 0
+        dv_files, per_file = self._write_dv(
+            pick(self._scan_with_pos(
+                base.manifest, candidates, base.schema_json, base.columns
+            ))
         )
-        return sum(per_file.values())
+        changed, removed = _regrow_dv(candidates, dv_files, per_file)
+        return changed, removed, sum(per_file.values())
 
-    @staticmethod
-    def _regrow_planned(
-        sel: list, dv_files: tuple, per_file: dict
-    ) -> "tuple[tuple, set]":
-        """Bounded-commit twin of :meth:`_grow_dv`: re-version the
-        PLANNED candidates whose positions the new DV tombstones, as a
-        ``(changed entries, removed paths)`` action diff. Same loud
-        guard — accounting keys outside the plan mean the delete would
-        silently drop its DV. Fully-dead entries leave the manifest
-        outright (removed without re-add)."""
-        by_path = {f.path: f for f in sel}
-        stray = sorted(set(per_file) - set(by_path))
-        if stray:  # same loud guard as _grow_dv
-            raise RuntimeError(
-                f"deletion-vector accounting references {len(stray)} "
-                f"path(s) outside the planned candidates (first: "
-                f"{stray[0]!r}); refusing to commit"
+    def _commit_diff(
+        self,
+        base: _DmlBase,
+        changed: tuple,
+        removed: set,
+        added: tuple,
+        op: str,
+        schema_json: "str | None" = None,
+        **kw,
+    ) -> bool:
+        """Commit an action diff on top of ``base`` through its backend:
+        ``removed`` paths leave, ``changed`` entries (re-versioned under
+        a removed path) and ``added`` ones land. Bounded →
+        :meth:`_commit_bounded`; classic → :meth:`_commit_files` over the
+        snapshot's file list with the diff applied in place. ``kw`` rides
+        through (txn, read_spans, columns, copy ledger)."""
+        if base.manifest is None:
+            return self._commit_bounded(
+                base.version, tuple(changed) + tuple(added), removed, op,
+                schema_json=schema_json, **kw,
             )
-        changed = []
-        removed: set[str] = set()
-        for rel, n in per_file.items():
-            f = by_path[rel]
-            nf = _dc_replace(
-                f, dv_paths=f.dv_paths + dv_files, dv_rows=f.dv_rows + n
-            )
-            removed.add(rel)
-            if nf.dv_rows < nf.rows:  # fully-dead entries leave outright
-                changed.append(nf)
-        return tuple(changed), removed
+        by_path = {f.path: f for f in changed}
+        files = tuple(
+            by_path.get(f.path, f)
+            for f in base.manifest.files
+            if f.path not in removed or f.path in by_path
+        )
+        return self._commit_files(
+            base.manifest, files + tuple(added), schema_json, op, **kw
+        )
 
     @staticmethod
     def _source_key_spans(
@@ -5050,44 +4961,6 @@ class ManagedTable:
             f"commit attempts under contention"
         )
 
-    def _delete_cow(self, m: Manifest, candidates: list, where: list[tuple]) -> int:
-        cand_df = self._scan_with_pos(m, candidates)
-        pred = _where_predicate(where)
-        n_match = cand_df.filter(pred).count()
-        if n_match == 0:
-            # stats admitted a match but the rows don't exist — keep
-            # every file byte-identical instead of rewriting them
-            self._commit_files(m, tuple(m.files), m.schema_json, "delete_noop")
-            return 0
-        survivors = cand_df.filter(~F.coalesce(pred, F.lit(False))).drop(
-            "__dwcs_uri", "__dwcs_pos"
-        )
-        new_files = self._write_files(
-            survivors, m.partition_date_col, m.cluster_col,
-            bloom_cols=m.bloom_cols,
-            columns=m.columns,
-        )
-        cand_paths = {c.path for c in candidates}
-        kept = tuple(f for f in m.files if f.path not in cand_paths)
-        self._commit_files(
-            m, kept + new_files, m.schema_json, "delete",
-            read_spans=_where_read_spans(where, m.columns),
-        )
-        return n_match
-
-    def _delete_dv(self, m: Manifest, candidates: list, where: list[tuple]) -> int:
-        hits = self._scan_with_pos(m, candidates).filter(_where_predicate(where))
-        dv_files, per_file = self._write_dv(hits)
-        if dv_files is None:
-            self._commit_files(m, tuple(m.files), m.schema_json, "delete_noop")
-            return 0
-        files = self._grow_dv(m.files, dv_files, per_file)
-        self._commit_files(
-            m, files, m.schema_json, "delete",
-            read_spans=_where_read_spans(where, m.columns),
-        )
-        return sum(per_file.values())
-
     def _scan_with_pos(
         self,
         m: "Manifest | None",
@@ -5147,7 +5020,7 @@ class ManagedTable:
         a symlinked table root the two differ and rel-only matching
         against one of them would return absolute keys that match no
         manifest entry (a delete would then report n rows but attach no
-        DV; see the guard in :meth:`_grow_dv`)."""
+        DV; see the guard in :func:`_regrow_dv`)."""
         from urllib.parse import unquote, urlparse
 
         p = Path(unquote(urlparse(uri).path))
@@ -5326,208 +5199,53 @@ class ManagedTable:
         per_file = {self._uri_to_rel(u): n for u, n in counts.items()}
         return dv_files, per_file
 
-    @staticmethod
-    def _grow_dv(
-        files: tuple, dv_files: tuple, per_file: dict
-    ) -> tuple:
-        """Re-version touched entries with the new DV attached; entries
-        whose every row is now deleted leave the manifest entirely (their
-        bytes and DVs become unreferenced — vacuum's problem, not every
-        future scan's). Every ``per_file`` key MUST name a manifest entry:
-        a key that matches nothing (e.g. a path-arithmetic drift between
-        the URI Spark rendered and the manifest's relative path) would
-        mean "n rows deleted" was reported while the commit attached no
-        DV — rows silently surviving. Loud failure instead."""
-        known = {f.path for f in files}
-        stray = sorted(set(per_file) - known)
-        if stray:
-            raise RuntimeError(
-                f"deletion-vector accounting references {len(stray)} path(s) "
-                f"absent from the manifest (first: {stray[0]!r}); refusing to "
-                f"commit a delete that would silently drop its DV"
-            )
-        grown = tuple(
-            _dc_replace(
-                f,
-                dv_paths=f.dv_paths + dv_files,
-                dv_rows=f.dv_rows + per_file[f.path],
-            )
-            if f.path in per_file
-            else f
-            for f in files
-        )
-        return tuple(f for f in grown if f.dv_rows < f.rows)
-
-    def _augment_generated_updates(self, set_exprs: dict) -> dict:
-        """Delta parity for UPDATE over generated columns: an assignment
-        that changes a generation expression's SOURCE without assigning
-        the generated column itself RECOMPUTES it — two-phase semantics
-        (user assignments evaluate over the OLD row, then the generation
-        expression over the UPDATED values), realized by substituting the
-        new-value SQL into the expression text. Only SQL-string/scalar
-        assignments can substitute; a Column object (or an expression
-        carrying string literals, where word-boundary substitution could
-        corrupt content) gets a LOUD error telling the caller to assign
-        the generated column explicitly — never a silent wrong value
-        (the gen_<col> CHECK would catch it anyway, but with a worse
-        message). Explicit assignments pass through untouched and are
-        validated by that constraint. Schema lookup rides
-        :meth:`_columns_state` (bounded past the planning gate), so a
-        10^6-file table's UPDATE never materializes its manifest here."""
-        _head, schema_json, _cols = self._columns_state()
-        if not schema_json:
-            return set_exprs
-        gen = {
-            f.name: f.metadata["generation_expression"]
-            for f in T.StructType.fromJson(json.loads(schema_json)).fields
-            if f.metadata and "generation_expression" in f.metadata
-        }
-        if not gen:
-            return set_exprs
-        out = dict(set_exprs)
-        for g, expr in gen.items():
-            if g in out:
-                continue  # explicit: the gen_<col> CHECK validates it
-            refs = set(re.findall(r"[A-Za-z_]\w*", expr))
-            touched = sorted(refs & set(out))
-            if not touched:
-                continue  # sources untouched: the stored value stays right
-            if "'" in expr or '"' in expr:
-                raise ValueError(
-                    f"UPDATE changes {touched}, which generated column "
-                    f"{g!r} derives from, but its expression carries "
-                    f"string literals so it cannot be recomputed by "
-                    f"substitution — assign {g} explicitly"
-                )
-            # SIMULTANEOUS substitution: SQL UPDATE evaluates every
-            # assignment RHS over the OLD row, so no replacement text may
-            # itself be rewritten by a later column's replacement
-            # (UPDATE a=b+1, b=0 must recompute a+b as (b+1)+(0), not
-            # ((0)+1)+(0)). One alternation pass over the ORIGINAL
-            # expression text guarantees that.
-            repl = {}
-            for c in touched:
-                v = out[c]
-                if isinstance(v, Column):
-                    raise ValueError(
-                        f"UPDATE changes {touched!r}, which generated "
-                        f"column {g!r} derives from; pass SQL-string "
-                        f"assignments (or assign {g} explicitly) so it "
-                        f"can be recomputed"
-                    )
-                if not isinstance(v, str):
-                    v = "NULL" if v is None else (
-                        f"CAST({v} AS BOOLEAN)" if isinstance(v, bool)
-                        else repr(v)
-                    )
-                repl[c] = f"({v})"
-            alt = "|".join(
-                re.escape(c) for c in sorted(repl, key=len, reverse=True)
-            )
-            out[g] = re.sub(
-                rf"\b(?:{alt})\b", lambda m: repl[m.group(0)], expr
-            )
-        return out
-
-    def update(
-        self, where: list[tuple], set_exprs: dict, strategy: str = "dv"
-    ) -> int:
-        """See :meth:`_update_impl` — this wrapper adds the identity
-        contract (round-13): assigning a GENERATED ALWAYS AS IDENTITY
-        column is rejected (Delta semantics — the engine owns those
-        values), and an UPDATE that assigns a BY DEFAULT identity
-        column syncs the watermark past the data max afterwards so a
-        raised id can never collide with a later allocation."""
-        specs = _identity_specs(self.snapshot().schema_json)
-        touched = sorted(c for c in (set_exprs or {}) if c in specs)
-        always = [c for c in touched if specs[c].get("always", True)]
-        if always:
-            raise ValueError(
-                f"column(s) {always} are GENERATED ALWAYS AS IDENTITY "
-                f"— UPDATE cannot assign them"
-            )
-        n = self._update_impl(where, set_exprs, strategy)
-        if n and touched:
-            self.sync_identity()
-        return n
-
-    def _update_impl(
-        self, where: list[tuple], set_exprs: dict, strategy: str = "dv"
-    ) -> int:
+    def update(self, where: list[tuple], set_exprs: dict) -> int:
         """Row-level predicate UPDATE as ONE atomic commit (Delta's
         ``UPDATE SET ... WHERE``): rows where the ``where`` conjunction is
         TRUE get each ``set_exprs`` column replaced (value may be a
         Column expression or a SQL string); NULL-predicate rows are
         untouched. Returns rows updated.
 
-        Both strategies stats-prune candidates and noop when no row
-        actually matches. ``strategy="dv"`` (default, merge-on-read):
-        matched OLD positions go into a deletion vector and only the k
-        REWRITTEN rows are written as new files — updating k rows costs
-        O(k) regardless of how big the candidate files are.
-        ``strategy="cow"`` rewrites the candidate files whole.
-        Assignments must target existing columns — UPDATE never evolves
-        the schema (that is ``append(merge_schema=True)``'s job) — and
-        values are cast to the column's current type so a same-named type
-        drift cannot poison the table."""
-        if not where:
-            raise ValueError("update() requires at least one predicate")
-        if not set_exprs:
-            raise ValueError("update() requires at least one assignment")
-        if strategy not in ("dv", "cow"):
-            raise ValueError(f"update strategy must be 'dv' or 'cow', got {strategy!r}")
-        set_exprs = self._augment_generated_updates(set_exprs)
-        # plain Python scalars are literals (Delta's updateExpr contract:
-        # strings are SQL expressions, Columns pass through, anything
-        # else wraps as a literal value)
-        set_exprs = {
-            c: v if isinstance(v, (Column, str)) else F.lit(v)
-            for c, v in set_exprs.items()
-        }
+        Candidates prune like :meth:`delete`, and the update noops when
+        no row actually matches. Merge-on-read: matched OLD positions go
+        into a deletion vector and only the k REWRITTEN rows are written
+        as new files — updating k rows costs O(k) regardless of how big
+        the candidate files are. Assignments must target existing
+        columns — UPDATE never evolves the schema (that is
+        ``append(merge_schema=True)``'s job) — and values are cast to the
+        column's current type so a same-named type drift cannot poison
+        the table.
+
+        Identity contract (round-13): assigning a GENERATED ALWAYS AS
+        IDENTITY column is rejected (Delta semantics — the engine owns
+        those values), and an UPDATE that assigns a BY DEFAULT identity
+        column syncs the watermark past the data max afterwards so a
+        raised id can never collide with a later allocation."""
         with _lock_for(self.root):
-            if strategy == "dv":
-                # bounded path: same write-side ceiling break as delete()
-                head = self._head_version()
-                planned = self._plan_distributed(
-                    head, None, None, None, where, keep_stats=True
+            base = self._dml_base()
+            specs = _identity_specs(base.schema_json)
+            id_touched = sorted(c for c in (set_exprs or {}) if c in specs)
+            always = [c for c in id_touched if specs[c].get("always", True)]
+            if always:
+                raise ValueError(
+                    f"column(s) {always} are GENERATED ALWAYS AS IDENTITY "
+                    f"— UPDATE cannot assign them"
                 )
-                if planned is not None:
-                    sel, schema_json, plan_columns = planned
-                    schema = (
-                        T.StructType.fromJson(json.loads(schema_json))
-                        if schema_json
-                        else T.StructType([])
-                    )
-                    known = {f.name: f.dataType for f in schema.fields}
-                    bad = sorted(set(set_exprs) - set(known))
-                    if bad:
-                        raise ValueError(
-                            f"update() assigns unknown columns {bad}; UPDATE "
-                            f"never adds columns (use "
-                            f"append(merge_schema=True))"
-                        )
-                    if not sel:
-                        self._commit_bounded(head, (), set(), "update_noop")
-                        return 0
-                    _ck, header, actions = self._plan_base(head)
-                    cluster_col = header.get("cluster_col")
-                    constraints = header.get("constraints")
-                    for raw in actions:
-                        if "cluster_col_change" in raw:
-                            cluster_col = raw["cluster_col_change"][0]
-                        if raw.get("constraints") is not None:
-                            constraints = raw["constraints"] or None
-                    return self._update_dv_core(
-                        None, head, sel, where, set_exprs, schema, known,
-                        header.get("partition_date_col"), cluster_col,
-                        header.get("bloom_cols"), schema_json=schema_json,
-                        columns=plan_columns,
-                        constraints=constraints,
-                    )
-            m = self.snapshot()
+            if not where:
+                raise ValueError("update() requires at least one predicate")
+            if not set_exprs:
+                raise ValueError("update() requires at least one assignment")
+            set_exprs = _augment_generated_updates(set_exprs, base.schema_json)
+            # plain Python scalars are literals (Delta's updateExpr
+            # contract: strings are SQL expressions, Columns pass through,
+            # anything else wraps as a literal value)
+            set_exprs = {
+                c: v if isinstance(v, (Column, str)) else F.lit(v)
+                for c, v in set_exprs.items()
+            }
             schema = (
-                T.StructType.fromJson(json.loads(m.schema_json))
-                if m.schema_json
+                T.StructType.fromJson(json.loads(base.schema_json))
+                if base.schema_json
                 else T.StructType([])
             )
             known = {f.name: f.dataType for f in schema.fields}
@@ -5537,91 +5255,27 @@ class ManagedTable:
                     f"update() assigns unknown columns {bad}; UPDATE never "
                     f"adds columns (use append(merge_schema=True))"
                 )
-            wp = _map_where(where, _phys_map(m.columns)) or []
-            candidates = [
-                f
-                for f in m.files
-                if all(_file_may_match(f.stats, c, op, v) for c, op, v in wp)
-            ]
-            if m.bloom_cols:
-                from data_warehouse_copy_spark.sources.bloom import bloom_prune
+            candidates = self._where_candidates(base, where)
+            n = (
+                self._update_rows(base, candidates, where, set_exprs, schema, known)
+                if candidates
+                else 0
+            )
+            if not n:
+                self._commit_diff(base, (), set(), (), "update_noop")
+        if n and id_touched:
+            self.sync_identity()
+        return n
 
-                candidates = bloom_prune(self.root, candidates, wp)
-            if not candidates:
-                self._commit_files(m, tuple(m.files), m.schema_json, "update_noop")
-                return 0
-            if strategy == "dv":
-                return self._update_dv(m, candidates, where, set_exprs, schema, known)
-            return self._update_cow(m, candidates, where, set_exprs, schema, known)
-
-    def _update_cow(
-        self, m, candidates, where, set_exprs, schema, known
+    def _update_rows(
+        self, base: _DmlBase, candidates: list, where: list,
+        set_exprs: dict, schema: "T.StructType", known: dict,
     ) -> int:
-        cand_df = self._scan_with_pos(m, candidates).drop(
-            "__dwcs_uri", "__dwcs_pos"
-        )
-        pred = _where_predicate(where)
-        n_match = cand_df.filter(pred).count()
-        if n_match == 0:
-            self._commit_files(m, tuple(m.files), m.schema_json, "update_noop")
-            return 0
-        hit = F.coalesce(pred, F.lit(False))
-        # ONE select so every assignment's right-hand side reads the
-        # ORIGINAL row (SQL UPDATE semantics) — sequential withColumn
-        # would let {a: b+1, b: a+1} read each other's new values.
-        assigned = {
-            c: F.when(
-                hit, (F.expr(v) if isinstance(v, str) else v).cast(known[c])
-            ).otherwise(F.col(c)).alias(c)
-            for c, v in set_exprs.items()
-        }
-        rewritten = cand_df.select(
-            *[assigned.get(f.name, F.col(f.name)) for f in schema.fields]
-        )
-        rewritten = self._enforce_constraints(rewritten, m.constraints, "update")
-        new_files = self._write_files(
-            rewritten, m.partition_date_col, m.cluster_col,
-            bloom_cols=m.bloom_cols,
-            columns=m.columns,
-        )
-        cand_paths = {c.path for c in candidates}
-        kept = tuple(f for f in m.files if f.path not in cand_paths)
-        self._commit_files(
-            m, kept + new_files, m.schema_json, "update",
-            read_spans=_where_read_spans(where, m.columns),
-        )
-        return n_match
-
-    def _update_dv(
-        self, m, candidates, where, set_exprs, schema, known
-    ) -> int:
-        return self._update_dv_core(
-            m, None, candidates, where, set_exprs, schema, known,
-            m.partition_date_col, m.cluster_col, m.bloom_cols,
-        )
-
-    def _update_dv_core(
-        self,
-        m: "Manifest | None",
-        base_version: int | None,
-        candidates: list,
-        where: list,
-        set_exprs: dict,
-        schema: "T.StructType",
-        known: dict,
-        part_col: str | None,
-        cluster_col,
-        bloom_cols,
-        schema_json: str | None = None,
-        columns: list | None = None,
-        constraints: dict | None = None,
-    ) -> int:
-        """The DV-update body shared by the classic (full-manifest) and
-        BOUNDED (``m is None``: distributed-plan candidates +
-        :meth:`_commit_bounded` action diff) paths — one implementation,
-        two commit shapes."""
+        """The UPDATE's DV + rewrite over non-empty ``candidates``;
+        commits and returns the rows updated, or returns 0 with nothing
+        committed when no candidate row matches."""
         hit_rows = self._scan_with_pos(
-            m, candidates, schema_json=schema_json, columns=columns
+            base.manifest, candidates, base.schema_json, base.columns
         ).filter(_where_predicate(where))
         # Stage the matched rows ONCE (originals + file coordinates): the
         # deletion vector, the match count, and the rewrite all derive from
@@ -5632,17 +5286,10 @@ class ManagedTable:
         try:
             staged = self.spark.read.parquet(str(stage))
             local = self._write_dv_local(stage)
-            if local is not None:
-                dv_files, per_file = local
-            else:
-                dv_files, per_file = self._write_dv(staged)
+            dv_files, per_file = (
+                local if local is not None else self._write_dv(staged)
+            )
             if dv_files is None:
-                if m is not None:
-                    self._commit_files(
-                        m, tuple(m.files), m.schema_json, "update_noop"
-                    )
-                else:
-                    self._commit_bounded(base_version, (), set(), "update_noop")
                 return 0
             # Every staged row matched, so assignments apply unconditionally;
             # one select keeps SQL UPDATE's read-the-original-row semantics.
@@ -5650,87 +5297,53 @@ class ManagedTable:
                 c: (F.expr(v) if isinstance(v, str) else v).cast(known[c]).alias(c)
                 for c, v in set_exprs.items()
             }
-            rewritten = staged.select(
-                *[assigned.get(f.name, F.col(f.name)) for f in schema.fields]
-            )
             rewritten = self._enforce_constraints(
-                rewritten,
-                constraints if m is None else m.constraints,
+                staged.select(
+                    *[assigned.get(f.name, F.col(f.name)) for f in schema.fields]
+                ),
+                base.constraints,
                 "update",
             )
             new_files = self._write_files(
-                rewritten, part_col, cluster_col, bloom_cols=bloom_cols,
-                columns=columns if m is None else m.columns,
+                rewritten, base.partition_date_col, base.cluster_col,
+                bloom_cols=base.bloom_cols, columns=base.columns,
             )
-            if m is not None:
-                files = self._grow_dv(m.files, dv_files, per_file)
-                self._commit_files(
-                    m, files + new_files, m.schema_json, "update",
-                    read_spans=_where_read_spans(where, m.columns),
-                )
-            else:
-                by_path = {f.path: f for f in candidates}
-                stray = sorted(set(per_file) - set(by_path))
-                if stray:
-                    raise RuntimeError(
-                        f"deletion-vector accounting references {len(stray)} "
-                        f"path(s) outside the planned candidates (first: "
-                        f"{stray[0]!r}); refusing to commit"
-                    )
-                changed = []
-                removed: set[str] = set()
-                for rel, n in per_file.items():
-                    f = by_path[rel]
-                    nf = _dc_replace(
-                        f,
-                        dv_paths=f.dv_paths + dv_files,
-                        dv_rows=f.dv_rows + n,
-                    )
-                    removed.add(rel)
-                    if nf.dv_rows < nf.rows:
-                        changed.append(nf)
-                self._commit_bounded(
-                    base_version, tuple(changed) + new_files, removed, "update",
-                    read_spans=_where_read_spans(where, columns),
-                )
+            changed, removed = _regrow_dv(candidates, dv_files, per_file)
+            self._commit_diff(
+                base, changed, removed, new_files, "update",
+                read_spans=_where_read_spans(where, base.columns),
+            )
             return sum(per_file.values())
         finally:
             shutil.rmtree(stage, ignore_errors=True)
 
-    def merge_by_key(
-        self, source_df: DataFrame, primary_key: str, strategy: str = "dv"
-    ) -> int:
+    def merge_by_key(self, source_df: DataFrame, primary_key: str) -> int:
         """Delete+reinsert by key as ONE atomic commit — the reference's
         upsert (O9 batched ``IN``-list delete + O10 re-select/insert,
         ``TableUpdateService.cs:108-161``) expressed as a join.
 
-        ``strategy="dv"`` (default, merge-on-read like :meth:`delete`):
-        target rows carrying a source key are tombstoned via a deletion
-        vector — positions found by a semi-join over the stats-scoped
-        candidate files — and the source rows append as new files. A
-        merge touches O(matched rows + source rows), never a partition
-        rewrite; :meth:`compact` folds the DVs. ``strategy="cow"`` keeps
-        the classic rewrite:
-
-        1. affected partitions/files = those holding any source key (via
-           semi-join / pk-span stats);
-        2. replacement data = target rows with the key removed
-           (``left_anti``) union the source rows;
-        3. only those partitions' files are rewritten.
+        Merge-on-read like :meth:`delete`: target rows carrying a source
+        key are tombstoned via a deletion vector — positions found by a
+        semi-join over the key-span candidate files — and the source rows
+        append as new files. A merge touches O(matched rows + source
+        rows), never a partition rewrite; :meth:`compact` folds the DVs.
+        Every target row with a source key is tombstoned and every source
+        row inserted, duplicates included (the reference's semantics; the
+        expression :meth:`merge` rejects duplicate matches instead).
 
         No key set ever reaches the driver (reference O8 ``collect`` is
         deliberately NOT ported, SURVEY.md §7 risk 6). Returns the number of
         distinct keys merged — matching the reference's metric, which reports
         the *key* count, not the row count (``TableUpdateService.cs:163``).
+
+        Identity contract (round-13): merge_by_key re-inserts PROVIDED
+        rows and never allocates — ALWAYS identity tables reject (their
+        ids are engine-owned), BY DEFAULT sources must carry the column
+        and the watermark syncs past their max afterwards.
         """
-        if strategy not in ("dv", "cow"):
-            raise ValueError(f"merge strategy must be 'dv' or 'cow', got {strategy!r}")
-        # identity contract (round-13): merge_by_key re-inserts PROVIDED
-        # rows and never allocates — ALWAYS identity tables reject
-        # (their ids are engine-owned), BY DEFAULT sources must carry
-        # the column and the watermark syncs past their max afterwards
-        specs = _identity_specs(self.snapshot().schema_json)
-        if specs:
+        with _lock_for(self.root):
+            base = self._dml_base()
+            specs = _identity_specs(base.schema_json)
             always = sorted(
                 c for c, sp in specs.items() if sp.get("always", True)
             )
@@ -5741,63 +5354,114 @@ class ManagedTable:
                     f"and never allocates; use BY DEFAULT identity, or "
                     f"a matched-only merge plus append"
                 )
-            missing = sorted(
-                c for c in specs if c not in source_df.columns
-            )
+            missing = sorted(c for c in specs if c not in source_df.columns)
             if missing:
                 raise ValueError(
                     f"merge_by_key source must PROVIDE the GENERATED BY "
                     f"DEFAULT AS IDENTITY column(s) {missing}"
                 )
-        with _lock_for(self.root):
-            if strategy == "dv":
-                b = self._bounded_ingest_base()
-                if b is not None and b[1] is not None:
-                    out = self._merge_dv_bounded(source_df, primary_key, b)
-                    if out is not None:
-                        out_n = out
-                        self._sync_identity_past_source(specs, source_df)
-                        return out_n
-                n = self._merge_dv(source_df, primary_key)
-            else:
-                n = self._merge_by_key(source_df, primary_key)
-        self._sync_identity_past_source(specs, source_df)
-        return n
-
-    def _sync_identity_past_source(self, specs: dict, source_df) -> None:
-        """Post-merge watermark sync for BY DEFAULT identity columns the
-        source provided: one column-pruned aggregate over the SOURCE
-        (never the table)."""
-        if not specs:
-            return
-        phys = _phys_map(self.snapshot().columns) or {}
+            # The distinct-key frame feeds THREE separate actions (count,
+            # span probe, position semi-join); unpersisted, each re-scans
+            # the source and re-runs the distinct shuffle — at scale that
+            # is 3x the source I/O for one merge. Persisting it is safe
+            # where the round-14 in-merge source persist was not: keys is
+            # already pruned to the single key column (nothing for pruning
+            # to lose) and its cached runtime size keeps the semi-join's
+            # broadcast decision accurate.
+            keys = source_df.select(primary_key).distinct().persist()
+            try:
+                n_keys = keys.count()
+                if n_keys == 0:
+                    # Empty key set still commits + completes
+                    # (TableUpdateService.cs:167-172)
+                    self._commit_diff(base, (), set(), (), "merge_noop")
+                else:
+                    changed, removed, _n = self._tombstone(
+                        base,
+                        self._key_candidates(base, keys, primary_key),
+                        lambda scan: scan.join(
+                            keys, on=primary_key, how="left_semi"
+                        ),
+                    )
+                    if base.schema_json:
+                        checked = self._enforce_constraints(
+                            source_df.select(*[
+                                f.name
+                                for f in T.StructType.fromJson(
+                                    json.loads(base.schema_json)
+                                ).fields
+                            ]),
+                            base.constraints,
+                            "merge",
+                        )
+                    else:
+                        # first data into a fresh table: adopt the source schema
+                        checked = source_df
+                    new_files = self._write_files(
+                        checked, base.partition_date_col, base.cluster_col,
+                        bloom_cols=base.bloom_cols,
+                        columns=base.columns,
+                    )
+                    self._commit_diff(
+                        base, changed, removed, new_files, "merge",
+                        schema_json=(
+                            None if base.schema_json
+                            else source_df.schema.json()
+                        ),
+                    )
+            finally:
+                keys.unpersist()
+        # post-merge watermark sync for the BY DEFAULT identity columns
+        # the source provided: one column-pruned aggregate over the
+        # SOURCE (never the table)
+        phys = _phys_map(base.columns) or {}
         for col, spec in specs.items():
             row = source_df.agg(F.max(col)).first()
-            mx = row[0] if row is not None else None
-            if mx is not None:
-                self._identity_sync_to(phys.get(col, col), spec, int(mx))
+            if row is not None and row[0] is not None:
+                self._identity_sync_to(phys.get(col, col), spec, int(row[0]))
+        return n_keys
 
-    def _bounded_span_candidates(
-        self,
-        head: int,
-        keys: DataFrame,
-        key_name: str,
-        schema: "T.StructType",
-        columns: list | None,
-    ) -> "list[FileEntry] | None":
-        """Key-span candidate files as a SPARK probe over the
-        checkpoint-backed :meth:`manifest_df` — the span frame never
-        exists driver-side in Python; only the surviving entries
-        collect. ``None`` → caller falls back to classic planning:
+    def _key_candidates(
+        self, base: _DmlBase, keys: DataFrame, key_name: str
+    ) -> list:
+        """Files of ``base`` whose ``key_name`` span admits one of
+        ``keys`` (works partitioned or not — footer stats cover every
+        column). Bounded: a SPARK probe over the checkpoint-backed
+        :meth:`manifest_df` — the span frame never exists driver-side in
+        Python; only the surviving entries collect. The probe falls back
+        to the classic driver-side span list over the snapshot at
+        ``base.version`` when its spans cannot be trusted: a
         non-integer/string key (float spans exclude NaN — the same
-        soundness rule :meth:`_affected_files_by_stats` enforces), a
-        file without exact key stats (candidates would be 'every file'
-        and the classic scan owns that shape), or a key name the JSON
-        path can't address."""
+        soundness rule :meth:`_affected_files_by_stats` enforces), a file
+        without exact key stats, or a key name the JSON path can't
+        address. Unusable classic stats degrade to EVERY file — a wider
+        scan for positions, never a wrong answer."""
+        if base.manifest is None:
+            sel = self._span_probe(base, keys, key_name)
+            if sel is not None:
+                return sel
+        m = base.manifest or self.snapshot(base.version)
+        affected = self._affected_files_by_stats(m, keys, key_name)
+        if affected is None:
+            return list(m.files)
+        return [f for f in m.files if f.path in affected]
+
+    def _span_probe(
+        self, base: _DmlBase, keys: DataFrame, key_name: str
+    ) -> "list[FileEntry] | None":
+        """The bounded key-span candidate probe (see
+        :meth:`_key_candidates`); None = spans untrustworthy."""
         if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", key_name):
             return None
         key_field = next(
-            (f for f in schema.fields if f.name == key_name), None
+            (
+                f
+                for f in T.StructType.fromJson(
+                    json.loads(base.schema_json)
+                ).fields
+                if f.name == key_name
+            ),
+            None,
         )
         if key_field is None:
             return None
@@ -5809,10 +5473,10 @@ class ManagedTable:
         else:
             return None
         # stats are keyed by the immutable PHYSICAL column name
-        key_phys = (_phys_map(columns) or {}).get(key_name, key_name)
+        key_phys = (_phys_map(base.columns) or {}).get(key_name, key_name)
         if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", key_phys):
             return None
-        mdf = self.manifest_df(head)
+        mdf = self.manifest_df(base.version)
         lo = F.get_json_object(
             F.col("stats_json"), f"$.{key_phys}[0]"
         ).cast(span_t)
@@ -5858,210 +5522,6 @@ class ManagedTable:
             )
             for r in cand_rows
         ]
-
-    def _merge_dv_bounded(
-        self, source_df: DataFrame, primary_key: str, b
-    ) -> "int | None":
-        """Bounded DV merge: the pk-span candidate probe runs over
-        :meth:`manifest_df` (checkpoint-backed — the span frame never
-        exists driver-side in Python) and the commit is an O(touched)
-        action diff. ``None`` → classic fallback: non-integer/string pk
-        (float spans exclude NaN — the same soundness rule
-        :meth:`_affected_files_by_stats` enforces), a file without exact
-        pk stats (candidates would be "every file" and the classic scan
-        owns that shape), or a pk name JSON-path extraction can't
-        address."""
-        head, schema_json, _txns, part_col, cluster_col, bloom_cols, columns, constraints = b
-        schema = T.StructType.fromJson(json.loads(schema_json))
-        # persisted for the same 3-action reuse as _merge_dv (count, span
-        # probe, position semi-join) — see the rationale there
-        keys = source_df.select(primary_key).distinct().persist()
-        try:
-            n_keys = keys.count()
-            if n_keys == 0:
-                self._commit_bounded(head, (), set(), "merge_noop")
-                return 0
-            sel = self._bounded_span_candidates(
-                head, keys, primary_key, schema, columns
-            )
-            if sel is None:
-                return None
-            changed: tuple = ()
-            removed: set = set()
-            if sel:
-                hits = self._scan_with_pos(
-                    None, sel, schema_json=schema_json, columns=columns
-                ).join(keys, on=primary_key, how="left_semi")
-                dv_files, per_file = self._write_dv(hits)
-                if dv_files is not None:
-                    changed, removed = self._regrow_planned(
-                        sel, dv_files, per_file
-                    )
-            cols = [f.name for f in schema.fields]
-            checked = self._enforce_constraints(
-                source_df.select(*cols), constraints, "merge"
-            )
-            new_files = self._write_files(
-                checked, part_col, cluster_col,
-                bloom_cols=bloom_cols,
-                columns=columns,
-            )
-            self._commit_bounded(head, changed + new_files, removed, "merge")
-            return n_keys
-        finally:
-            keys.unpersist()
-
-    def _merge_dv(self, source_df: DataFrame, primary_key: str) -> int:
-        m = self.snapshot()
-        # The distinct-key frame feeds THREE separate actions (count,
-        # span probe, position semi-join); unpersisted, each re-scans the
-        # source and re-runs the distinct shuffle — at scale that is 3x
-        # the source I/O for one merge. Persisting it is safe where the
-        # round-14 in-merge source persist was not: keys is already
-        # pruned to the single key column (nothing for pruning to lose)
-        # and its cached runtime size keeps the semi-join's broadcast
-        # decision accurate.
-        keys = source_df.select(primary_key).distinct().persist()
-        try:
-            n_keys = keys.count()
-            if n_keys == 0:
-                # Empty key set still commits + completes (TableUpdateService.cs:167-172)
-                self._commit_files(m, tuple(m.files), m.schema_json, "merge_noop")
-                return 0
-            # Candidate files by pk span (works partitioned or not — footer
-            # stats cover every column); unusable stats degrade to scanning
-            # every file for POSITIONS, never to a wrong answer, and still
-            # rewrite nothing.
-            affected = self._affected_files_by_stats(m, keys, primary_key)
-            candidates = (
-                list(m.files)
-                if affected is None
-                else [f for f in m.files if f.path in affected]
-            )
-            files = tuple(m.files)
-            if candidates:
-                hits = self._scan_with_pos(m, candidates).join(
-                    keys, on=primary_key, how="left_semi"
-                )
-                dv_files, per_file = self._write_dv(hits)
-                if dv_files is not None:
-                    files = self._grow_dv(m.files, dv_files, per_file)
-            if m.schema_json:
-                cols = [
-                    f.name
-                    for f in T.StructType.fromJson(json.loads(m.schema_json)).fields
-                ]
-                checked = self._enforce_constraints(
-                    source_df.select(*cols), m.constraints, "merge"
-                )
-                new_files = self._write_files(
-                    checked, m.partition_date_col, m.cluster_col,
-                    bloom_cols=m.bloom_cols,
-                    columns=m.columns,
-                )
-                self._commit_files(m, files + new_files, m.schema_json, "merge")
-            else:  # first data into a fresh table: adopt the source schema
-                new_files = self._write_files(
-                    source_df, m.partition_date_col, m.cluster_col,
-                    bloom_cols=m.bloom_cols,
-                    columns=m.columns,
-                )
-                self._commit_files(
-                    m, files + new_files, source_df.schema.json(), "merge"
-                )
-            return n_keys
-        finally:
-            keys.unpersist()
-
-    def _merge_by_key(self, source_df: DataFrame, primary_key: str) -> int:
-        m = self.snapshot()
-        source_df = self._enforce_constraints(source_df, m.constraints, "merge")
-        # persisted for the same multi-action reuse as _merge_dv (count,
-        # candidate probe, rewrite anti-join) — see the rationale there
-        keys = source_df.select(primary_key).distinct().persist()
-        try:
-            return self._merge_by_key_planned(m, source_df, keys, primary_key)
-        finally:
-            keys.unpersist()
-
-    def _merge_by_key_planned(
-        self, m, source_df: DataFrame, keys: DataFrame, primary_key: str
-    ) -> int:
-        n_keys = keys.count()
-        if n_keys == 0:
-            # Empty key set still commits + completes (TableUpdateService.cs:167-172)
-            self._commit_files(m, tuple(m.files), m.schema_json, "merge_noop")
-            return 0
-
-        if m.partition_date_col is None:
-            # Stats-scoped rewrite (Delta-style merge pruning): a file can
-            # hold an affected key only if its primary-key span admits one.
-            # On a cluster_col=pk table the affected set is a handful of
-            # files; unclustered spans overlap everything and this gracefully
-            # degrades to the full rewrite.
-            affected_paths = self._affected_files_by_stats(m, keys, primary_key)
-            if affected_paths is None:  # stats unusable -> full rewrite
-                target = self.read()
-                kept: tuple[FileEntry, ...] = ()
-            else:
-                schema = (
-                    T.StructType.fromJson(json.loads(m.schema_json))
-                    if m.schema_json
-                    else T.StructType([])
-                )
-                cand = [f for f in m.files if f.path in affected_paths]
-                # _scan_with_pos: schema-explicit (pre-evolution files
-                # null-backfill) AND prior deletion vectors subtracted — a
-                # raw candidate read would resurrect DV'd rows into the
-                # rewrite
-                target = (
-                    self._scan_with_pos(m, cand).drop(
-                        "__dwcs_uri", "__dwcs_pos"
-                    )
-                    if cand
-                    else self.spark.createDataFrame([], schema)
-                )
-                kept = tuple(f for f in m.files if f.path not in affected_paths)
-            merged = target.join(keys, on=primary_key, how="left_anti").unionByName(
-                source_df.select(*target.columns) if target.columns else source_df
-            )
-            new_files = self._write_files(merged, None, m.cluster_col, bloom_cols=m.bloom_cols, columns=m.columns)
-            self._commit_files(m, kept + new_files, merged.schema.json(), "merge")
-            return n_keys
-
-        part_col = m.partition_date_col
-        target = self.read()
-        # Partitions containing affected keys — a column-pruned scan of
-        # (pk, date) only; result is a small day-string list (metadata scale).
-        # No broadcast hint: Catalyst/AQE broadcasts the key side automatically
-        # when it is under the threshold; at 100 TB the key set may be large
-        # and a forced broadcast would OOM the executors.
-        tgt_parts = (
-            target.join(keys, on=primary_key, how="left_semi")
-            .select(F.date_format(F.col(part_col), "yyyy-MM-dd").alias("p"))
-            .distinct()
-        )
-        src_parts = source_df.select(
-            F.date_format(F.col(part_col), "yyyy-MM-dd").alias("p")
-        ).distinct()
-        affected = {r["p"] for r in tgt_parts.union(src_parts).distinct().collect()}
-        # Null-day rows can hold affected keys but live in the null partition;
-        # the reference's key-delete reaches them too (DELETE ... WHERE pk IN).
-        if any(f.partition is None for f in m.files):
-            affected.add(None)
-        if not affected:
-            self._commit_files(m, tuple(m.files), m.schema_json, "merge_noop")
-            return n_keys
-
-        target_affected = self.read(partitions=affected)
-        cols = target_affected.columns or source_df.columns
-        merged = target_affected.join(
-            keys, on=primary_key, how="left_anti"
-        ).unionByName(source_df.select(*cols))
-        new_files = self._write_files(merged, part_col, m.cluster_col, bloom_cols=m.bloom_cols, columns=m.columns)
-        kept = tuple(f for f in m.files if f.partition not in affected)
-        self._commit_files(m, kept + new_files, merged.schema.json(), "merge")
-        return n_keys
 
     def merge(
         self,
@@ -6199,8 +5659,8 @@ class ManagedTable:
         skipped = {"updated": 0, "deleted": 0, "inserted": 0,
                    "skipped": True}
         with _lock_for(self.root):
-            b = self._bounded_ingest_base()
-            if txn is not None and b is not None:
+            base = self._dml_base()
+            if txn is not None:
                 # ``txn=(app_id, version)`` makes the merge IDEMPOTENT per
                 # app (the append/overwrite contract extended to MERGE —
                 # what a foreachBatch CDF consumer needs for exactly-once
@@ -6208,32 +5668,15 @@ class ManagedTable:
                 # the table already recorded skips before doing any work;
                 # a CAS race with a concurrent retry is caught again at
                 # commit time (the commit returns False).
-                last = (b[2] or {}).get(str(txn[0]))
+                last = base.txns.get(str(txn[0]))
                 if last is not None and last >= txn[1]:
                     return dict(skipped)
-            if b is not None and b[1] is not None and not by_source_clauses:
-                # bounded expression merge: candidates from the
-                # checkpoint-backed span probe, O(touched) action-diff
-                # commit — the last DML path to get its bounded twin.
-                # (NOT MATCHED BY SOURCE touches every target row by
-                # semantics, so it takes the classic full plan.)
-                out = self._merge_expr_bounded(
-                    source_df, key_cols, matched_clauses,
-                    insert_clauses, b, txn=txn,
-                )
-                if out is not None:
-                    return out
-            m = self.snapshot()
-            if txn is not None:
-                last = (m.txns or {}).get(str(txn[0]))
-                if last is not None and last >= txn[1]:
-                    return dict(skipped)
-            if not m.schema_json:
+            if not base.schema_json:
                 raise ValueError(
                     "merge() requires an existing table schema; use append() "
                     "to create the table first"
                 )
-            schema = T.StructType.fromJson(json.loads(m.schema_json))
+            schema = T.StructType.fromJson(json.loads(base.schema_json))
             known = {f.name: f.dataType for f in schema.fields}
             cols = [f.name for f in schema.fields]
             src_cols = set(source_df.columns)
@@ -6248,46 +5691,37 @@ class ManagedTable:
             )
             _validate_insert_clauses(insert_clauses, known, src_cols, cols)
             id_sync_cols = _merge_identity_gate(
-                _identity_specs(m.schema_json), insert_clauses,
+                _identity_specs(base.schema_json), insert_clauses,
                 matched_clauses + by_source_clauses,
             )
             keys = None
             try:
                 if by_source_clauses:
                     # every target row participates — pruning would silently
-                    # exempt rows in unprobed files from the by-source clauses
-                    candidates = list(m.files)
+                    # exempt rows in unprobed files from the by-source
+                    # clauses, so the operation is O(table) by semantics
+                    candidates = self._where_candidates(base, [])
                     merge_spans = {}  # by-source reads everything (eager)
                 else:
                     # persisted: the key frame feeds the candidate probe AND
-                    # the commit's read-span aggregate — see _merge_dv
+                    # the commit's read-span aggregate — see merge_by_key.
+                    # The probe prunes on the FIRST key column (sound: a
+                    # file whose first-key span admits no source key can't
+                    # hold a match).
                     keys = source_df.select(*key_cols).distinct().persist()
-                    affected = self._affected_files_by_stats(m, keys, key_cols[0])
-                    candidates = (
-                        list(m.files)
-                        if affected is None
-                        else [f for f in m.files if f.path in affected]
-                    )
-                    _k = keys
+                    candidates = self._key_candidates(base, keys, key_cols[0])
+                    # lazily: conflict-free commits never pay the aggregate
                     merge_spans = (
-                        lambda k=_k, c=key_cols[0], cl=m.columns:
+                        lambda k=keys, c=key_cols[0], cl=base.columns:
                         self._source_key_spans(k, c, cl)
                     )
                 dv_files, per_file, written, counts = self._merge_core(
-                    m, candidates, source_df, key_cols, schema, known, cols,
-                    matched_clauses, by_source_clauses,
-                    insert_clauses,
-                    m.constraints, m.partition_date_col, m.cluster_col,
-                    m.bloom_cols, m.columns,
+                    base, candidates, source_df, key_cols, schema, known,
+                    cols, matched_clauses, by_source_clauses, insert_clauses,
                 )
-                n_updated, n_deleted, n_inserted = counts
-                files = tuple(m.files)
-                if dv_files is not None:
-                    files = self._grow_dv(files, dv_files, per_file)
-                landed = self._commit_files(
-                    m,
-                    files + written,
-                    m.schema_json,
+                changed, removed = _regrow_dv(candidates, dv_files, per_file)
+                landed = self._commit_diff(
+                    base, changed, removed, written,
                     "merge" if any(counts) else "merge_noop",
                     txn=txn,
                     read_spans=merge_spans,
@@ -6301,114 +5735,24 @@ class ManagedTable:
                 # BY DEFAULT identity: the watermark must outrun every
                 # provided id so later ALLOCATIONS never collide
                 self._advance_identity_past_files(
-                    id_sync_cols, written, m.columns
+                    id_sync_cols, written, base.columns
                 )
-        return {
-            "updated": n_updated,
-            "deleted": n_deleted,
-            "inserted": n_inserted,
-        }
-
-    def _merge_expr_bounded(
-        self,
-        source_df: DataFrame,
-        key_cols: list,
-        matched_clauses: list,
-        insert_clauses: list,
-        b,
-        txn: "tuple[str, int] | None" = None,
-    ) -> "dict | None":
-        """Bounded twin of the expression merge: key-span candidates from
-        :meth:`_bounded_span_candidates` (the span frame never exists
-        driver-side), the SAME :meth:`_merge_core` middle, and an
-        O(touched) action-diff commit. ``None`` → classic fallback
-        (multi-column key — the span probe is single-key — or spans the
-        probe can't trust). By-source clauses never reach here (see
-        :meth:`merge` — they are full-table by semantics)."""
-        head, schema_json, _txns, part_col, cluster_col, bloom_cols, columns, constraints = b
-        schema = T.StructType.fromJson(json.loads(schema_json))
-        known = {f.name: f.dataType for f in schema.fields}
-        cols = [f.name for f in schema.fields]
-        src_cols = set(source_df.columns)
-        for k in key_cols:
-            if k not in known or k not in src_cols:
-                raise ValueError(
-                    f"merge key {k!r} must exist on both sides "
-                    f"(target {sorted(known)}, source {sorted(src_cols)})"
-                )
-        _validate_merge_assignments(matched_clauses, known, key_cols)
-        _validate_insert_clauses(insert_clauses, known, src_cols, cols)
-        id_sync_cols = _merge_identity_gate(
-            _identity_specs(schema_json), insert_clauses, matched_clauses
-        )
-        # persisted: feeds the span probe AND the commit's read-span
-        # aggregate — see _merge_dv for the persist rationale
-        keys = source_df.select(*key_cols).distinct().persist()
-        try:
-            # the span probe prunes on the FIRST key column (sound: a file
-            # whose first-key span admits no source key can't hold a match);
-            # a probe miss falls back to the classic full-manifest plan
-            sel = self._bounded_span_candidates(
-                head, keys.select(key_cols[0]).distinct(), key_cols[0],
-                schema, columns,
-            )
-            if sel is None:
-                return None
-            dv_files, per_file, written, counts = self._merge_core(
-                None, sel, source_df, key_cols, schema, known, cols,
-                matched_clauses, [],
-                insert_clauses,
-                constraints, part_col, cluster_col, bloom_cols, columns,
-            )
-            changed: tuple = ()
-            removed: set = set()
-            if dv_files is not None:
-                changed, removed = self._regrow_planned(sel, dv_files, per_file)
-            landed = self._commit_bounded(
-                head, changed + written, removed,
-                "merge" if any(counts) else "merge_noop",
-                txn=txn,
-                read_spans=(
-                    lambda k=keys, c=key_cols[0], cl=columns:
-                    self._source_key_spans(k, c, cl)
-                ),
-            )
-        finally:
-            keys.unpersist()
-        if not landed:
-            return {"updated": 0, "deleted": 0, "inserted": 0,
-                    "skipped": True}
-        if id_sync_cols and written:
-            self._advance_identity_past_files(
-                id_sync_cols, written, columns
-            )
-        return {
-            "updated": counts[0],
-            "deleted": counts[1],
-            "inserted": counts[2],
-        }
+        return dict(zip(("updated", "deleted", "inserted"), counts))
 
     def _merge_core(
-        self, m, candidates, source_df, key_cols, schema, known, cols,
+        self, base, candidates, source_df, key_cols, schema, known, cols,
         matched_clauses, by_source_clauses, insert_clauses,
-        constraints, part_col, cluster_col, bloom_cols, columns,
     ) -> "tuple[tuple | None, dict, tuple, tuple]":
-        """The expression-merge MIDDLE, shared by the classic and bounded
-        paths (their difference is candidate planning and commit shape
-        only): first-match-wins clause routing, cardinality guard,
-        distinct-position DV write, update/insert frames, constraint
-        proof, file write. ``matched_clauses`` / ``by_source_clauses``
-        are ordered ``(condition, assignments-or-None)`` lists
-        (None = DELETE). Returns ``(dv_files, per_file, written_entries,
-        (n_upd, n_del, n_ins))`` — ``dv_files`` None when no target row
-        was acted on. ``m`` is None on the bounded path
-        (``_scan_with_pos`` then plans from the header schema/columns)."""
-        schema_json = schema.json()
+        """The expression-merge MIDDLE: first-match-wins clause routing,
+        cardinality guard, distinct-position DV write, update/insert
+        frames, constraint proof, file write. ``matched_clauses`` /
+        ``by_source_clauses`` are ordered ``(condition,
+        assignments-or-None)`` lists (None = DELETE). Returns
+        ``(dv_files, per_file, written_entries, (n_upd, n_del, n_ins))``
+        — ``dv_files`` None when no target row was acted on."""
         t_scan = (
             self._scan_with_pos(
-                m, candidates,
-                schema_json=None if m is not None else schema_json,
-                columns=None if m is not None else columns,
+                base.manifest, candidates, base.schema_json, base.columns
             )
             if candidates
             else self.spark.createDataFrame(
@@ -6641,13 +5985,13 @@ class ManagedTable:
                 out = frames[0]
                 for fdf in frames[1:]:
                     out = out.unionByName(fdf)
-                out = self._enforce_constraints(out, constraints, "merge")
+                out = self._enforce_constraints(out, base.constraints, "merge")
                 written = self._write_files(
                     out,
-                    part_col,
-                    cluster_col,
-                    bloom_cols=bloom_cols,
-                    columns=columns,
+                    base.partition_date_col,
+                    base.cluster_col,
+                    bloom_cols=base.bloom_cols,
+                    columns=base.columns,
                 )
                 if insert_clauses:
                     # Insert count from the parquet footers _write_files
@@ -7862,8 +7206,7 @@ class ManagedTable:
         return merged_away
 
     def _past_planning_gate(self) -> bool:
-        b = self._bounded_ingest_base()
-        return b is not None and b[1] is not None
+        return self._dml_base().manifest is None
 
     def recluster(
         self,
@@ -8104,16 +7447,9 @@ class ManagedTable:
         import time
 
         if distributed is None:
-            distributed = False
-            if self.spark is not None:
-                base = self._plan_base(self._head_version())
-                if base is not None:
-                    import pyarrow.parquet as pq
-
-                    distributed = (
-                        pq.ParquetFile(base[0]).metadata.num_rows
-                        >= _DISTRIBUTED_PLAN_MIN_FILES
-                    )
+            distributed = self.spark is not None and (
+                self._bounded_plan_base(self._head_version()) is not None
+            )
         extra = (
             self.clean_log(log_retention_seconds, dry_run=dry_run)
             if log_retention_seconds is not None
@@ -8417,6 +7753,77 @@ def _phys_map(columns: list | None) -> dict | None:
         c["name"]: c["physical"] for c in columns if not c.get("dropped")
     }
     return m if any(k != v for k, v in m.items()) else None
+
+
+def _augment_generated_updates(set_exprs: dict, schema_json: "str | None") -> dict:
+    """Delta parity for UPDATE over generated columns: an assignment
+    that changes a generation expression's SOURCE without assigning
+    the generated column itself RECOMPUTES it — two-phase semantics
+    (user assignments evaluate over the OLD row, then the generation
+    expression over the UPDATED values), realized by substituting the
+    new-value SQL into the expression text. Only SQL-string/scalar
+    assignments can substitute; a Column object (or an expression
+    carrying string literals, where word-boundary substitution could
+    corrupt content) gets a LOUD error telling the caller to assign
+    the generated column explicitly — never a silent wrong value
+    (the gen_<col> CHECK would catch it anyway, but with a worse
+    message). Explicit assignments pass through untouched and are
+    validated by that constraint. ``schema_json`` is the UPDATE's
+    base schema (bounded past the planning gate), so a 10^6-file
+    table's UPDATE never materializes its manifest here."""
+    if not schema_json:
+        return set_exprs
+    gen = {
+        f.name: f.metadata["generation_expression"]
+        for f in T.StructType.fromJson(json.loads(schema_json)).fields
+        if f.metadata and "generation_expression" in f.metadata
+    }
+    if not gen:
+        return set_exprs
+    out = dict(set_exprs)
+    for g, expr in gen.items():
+        if g in out:
+            continue  # explicit: the gen_<col> CHECK validates it
+        refs = set(re.findall(r"[A-Za-z_]\w*", expr))
+        touched = sorted(refs & set(out))
+        if not touched:
+            continue  # sources untouched: the stored value stays right
+        if "'" in expr or '"' in expr:
+            raise ValueError(
+                f"UPDATE changes {touched}, which generated column "
+                f"{g!r} derives from, but its expression carries "
+                f"string literals so it cannot be recomputed by "
+                f"substitution — assign {g} explicitly"
+            )
+        # SIMULTANEOUS substitution: SQL UPDATE evaluates every
+        # assignment RHS over the OLD row, so no replacement text may
+        # itself be rewritten by a later column's replacement
+        # (UPDATE a=b+1, b=0 must recompute a+b as (b+1)+(0), not
+        # ((0)+1)+(0)). One alternation pass over the ORIGINAL
+        # expression text guarantees that.
+        repl = {}
+        for c in touched:
+            v = out[c]
+            if isinstance(v, Column):
+                raise ValueError(
+                    f"UPDATE changes {touched!r}, which generated "
+                    f"column {g!r} derives from; pass SQL-string "
+                    f"assignments (or assign {g} explicitly) so it "
+                    f"can be recomputed"
+                )
+            if not isinstance(v, str):
+                v = "NULL" if v is None else (
+                    f"CAST({v} AS BOOLEAN)" if isinstance(v, bool)
+                    else repr(v)
+                )
+            repl[c] = f"({v})"
+        alt = "|".join(
+            re.escape(c) for c in sorted(repl, key=len, reverse=True)
+        )
+        out[g] = re.sub(
+            rf"\b(?:{alt})\b", lambda m: repl[m.group(0)], expr
+        )
+    return out
 
 
 def _normalize_merge_clauses(raw: list, arg: str) -> "list[tuple]":

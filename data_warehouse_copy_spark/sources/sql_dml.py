@@ -4965,15 +4965,11 @@ def _execute_sql(spark: SparkSession, catalog, sql: str) -> DataFrame:
         from pyspark.sql import types as T
 
         head_v = t._head_version()
-        b = t._bounded_ingest_base()
-        if b is not None and b[1] is not None:
-            _h, schema_json, _tx, part_col, cluster_col, bloom, cols, cons = b
-        else:
-            m = t.snapshot()
-            schema_json, part_col, cluster_col = (
-                m.schema_json, m.partition_date_col, m.cluster_col
-            )
-            bloom, cols, cons = m.bloom_cols, m.columns, m.constraints
+        b = t._dml_base()
+        schema_json, part_col, cluster_col = (
+            b.schema_json, b.partition_date_col, b.cluster_col
+        )
+        bloom, cols, cons = b.bloom_cols, b.columns, b.constraints
         n_cols = (
             len(T.StructType.fromJson(_json.loads(schema_json)).fields)
             if schema_json

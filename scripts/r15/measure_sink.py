@@ -92,7 +92,7 @@ def main() -> None:
     t0 = time.perf_counter()
     t_ = ManagedTable.create(None, root3)
     t1 = time.perf_counter()
-    b_ = t_._bounded_ingest_base()
+    t_._bounded_plan_base(t_._head_version())
     t2 = time.perf_counter()
     m = t_.snapshot()
     t3 = time.perf_counter()

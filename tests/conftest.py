@@ -40,8 +40,9 @@ def sf_dir_med():
 # (`pytest tests/`, via pytest.ini addopts `-m "not slow"`) finishes
 # inside the window; the FULL tier is `pytest tests/ -m ""` (or
 # `-m "slow or not slow"`) and stays the bar for round-level sign-off.
-# Entries are exact nodeids; a renamed test silently drops off this list
-# (collection below tolerates misses), so renames should grep it.
+# Entries are exact nodeids; collection below tolerates misses, so
+# tests/test_slow_tier.py fails when an entry no longer collects (a
+# renamed slow test would otherwise slip into the default tier).
 _SLOW_TESTS = frozenset([
     "tests/test_ann_index.py::test_build_is_deterministic",
     "tests/test_ann_index.py::test_build_search_recall_vs_brute_force",

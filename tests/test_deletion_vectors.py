@@ -1,5 +1,5 @@
-"""Merge-on-read deletion vectors (ManagedTable delete/update
-strategy="dv", the default): deleting k rows must write O(k) positions +
+"""Merge-on-read deletion vectors (ManagedTable delete/update/merge —
+the only row-level strategy): deleting k rows must write O(k) positions +
 metadata — never rewrite a data file — while every read surface (native,
 declarative, time travel, compaction, vacuum, restore) stays exact.
 
@@ -140,17 +140,55 @@ def test_dv_time_travel_and_restore(spark, tmp_path):
     assert t.read().count() == 950
 
 
-def test_dv_cow_strategy_still_available_and_folds(spark, tmp_path):
-    """strategy='cow' keeps the classic rewrite path: candidate files are
-    replaced, surviving rows of PRIOR DVs are honored, and the rewritten
-    files carry no DV."""
+def test_dv_delete_over_prior_dv_then_compact_folds(spark, tmp_path):
+    """A second delete over rows a prior DV already removed counts only
+    the rows it newly deletes, and compact() folds every DV into clean
+    files — both states equal to the rows the test computes itself."""
     t = _mk(spark, tmp_path / "t")
-    t.delete([("k", "<", 10)])  # dv
-    n = t.delete([("k", "<", 20)], strategy="cow")
+    t.delete([("k", "<", 10)])
+    n = t.delete([("k", "<", 20)])
     assert n == 10
+    expected = sorted((k, k % 7) for k in range(20, 1000))
+    assert sorted(map(tuple, t.read().collect())) == expected
+    t.compact()
     m = t.snapshot()
     assert all(not f.dv_paths and not f.dv_rows for f in m.files)
-    assert t.read().count() == 980
+    assert sorted(map(tuple, t.read().collect())) == expected
+
+
+def test_dv_read_rejects_drifted_dv_columns(spark, tmp_path):
+    """The DV read declares its schema instead of inferring it, so a DV
+    file whose column names drifted would read as all-NULL and silently
+    bring back every row it deletes. The footer-name guard must raise
+    instead — and checking an intact DV launches no Spark job."""
+    import pyarrow.parquet as pq
+
+    t = _mk(spark, tmp_path / "t")
+    assert t.delete([("k", "<", 10)]) == 10
+    dv = next(p for f in t.snapshot().files for p in f.dv_paths)
+    sc = spark.sparkContext
+    sc.setJobGroup("dv_guard_probe", "dv guard")
+    try:
+        t._dv_frame([dv])
+    finally:
+        sc.setJobGroup("", "")
+    assert list(sc.statusTracker().getJobIdsForGroup("dv_guard_probe")) == []
+    # a second table whose DV file (not yet read in this process) drifts
+    u = _mk(spark, tmp_path / "u")
+    assert u.delete([("k", "<", 10)]) == 10
+    dv_file = tmp_path / "u" / next(
+        p for f in u.snapshot().files for p in f.dv_paths
+    )
+    tbl = pq.read_table(dv_file)
+    # what a drifted writer would produce: renamed column, and no stale
+    # Spark schema metadata describing the old names
+    pq.write_table(
+        tbl.rename_columns(["file_uri", "path", "pos"]).replace_schema_metadata(),
+        dv_file,
+    )
+    (dv_file.parent / f".{dv_file.name}.crc").unlink(missing_ok=True)
+    with pytest.raises(RuntimeError, match="deletion-vector file"):
+        u.read().count()
 
 
 def test_dv_compact_folds_and_vacuum_reaps(spark, tmp_path):
@@ -316,9 +354,9 @@ def test_vacuum_vs_pinned_reader_race(spark, tmp_path):
 
 
 def test_dv_merge_by_key_rewrites_nothing(spark, tmp_path):
-    """merge_by_key default (DV): matched target rows tombstone, source
-    rows append — no pre-existing data file rewritten, convergence exact,
-    prior DVs honored, and strategy='cow' still folds everything."""
+    """merge_by_key (DV): matched target rows tombstone, source rows
+    append — no pre-existing data file rewritten, convergence exact,
+    prior DVs honored, and compact() folds everything."""
     t = ManagedTable.create(spark, tmp_path / "t", cluster_col="k")
     t.append(spark.range(0, 1000).selectExpr("id AS k", "CAST(0.0 AS DOUBLE) AS v"))
     t.delete([("k", ">=", 100), ("k", "<", 105)])  # prior DV
@@ -346,13 +384,17 @@ def test_dv_merge_by_key_rewrites_nothing(spark, tmp_path):
     out2 = t.read()
     assert out2.count() == out.count()
     assert out2.groupBy("k").count().filter("count > 1").count() == 0
-    # cow strategy folds all DVs away and converges identically
-    t.merge_by_key(src, "k", strategy="cow")
+    expected = sorted(
+        [(k, 0.0) for k in range(1000) if not 100 <= k < 120]
+        + [(k, k * 2.0) for k in range(100, 120)]
+        + [(k, 1.0) for k in range(5000, 5010)]
+    )
+    assert sorted(map(tuple, out2.collect())) == expected
+    # compact folds all DVs away and converges identically
+    t.compact()
     m3 = t.snapshot()
     assert all(not f.dv_paths for f in m3.files)
-    assert {tuple(r) for r in t.read().collect()} == {
-        tuple(r) for r in out.collect()
-    }
+    assert sorted(map(tuple, t.read().collect())) == expected
 
 
 def test_dv_merge_on_partitioned_table(spark, tmp_path, lineitem):
@@ -451,16 +493,19 @@ def test_replace_where_empty_slice_just_inserts(spark, tmp_path):
     assert t.read().count() == 1010
 
 
-def test_replace_where_cow_matches_dv(spark, tmp_path):
-    ta = _mk(spark, tmp_path / "a")
-    tb = _mk(spark, tmp_path / "b")
+def test_replace_where_matches_computed_rows_and_folds(spark, tmp_path):
+    t = _mk(spark, tmp_path / "t")
     repl = spark.range(200, 220).selectExpr("id AS k", "CAST(7 AS long) AS v")
     where = [("k", ">=", 200), ("k", "<", 300)]
-    assert ta.replace_where(repl, where, strategy="dv") == (100, 20)
-    assert tb.replace_where(repl, where, strategy="cow") == (100, 20)
-    assert sorted(map(tuple, ta.read().collect())) == sorted(
-        map(tuple, tb.read().collect())
+    assert t.replace_where(repl, where) == (100, 20)
+    expected = sorted(
+        [(k, k % 7) for k in range(1000) if not 200 <= k < 300]
+        + [(k, 7) for k in range(200, 220)]
     )
+    assert sorted(map(tuple, t.read().collect())) == expected
+    t.compact()
+    assert all(not f.dv_paths for f in t.snapshot().files)
+    assert sorted(map(tuple, t.read().collect())) == expected
 
 
 def test_dv_delete_under_symlinked_root(spark, tmp_path):
@@ -469,7 +514,7 @@ def test_dv_delete_under_symlinked_root(spark, tmp_path):
     root.resolve() follows them — _uri_to_rel must relativize against
     both, or per-file DV accounting comes back absolute, matches no
     manifest entry, and delete() reports n rows while the rows survive
-    (now also guarded loudly in _grow_dv)."""
+    (now also guarded loudly in _regrow_dv)."""
     real = tmp_path / "real_tables"
     real.mkdir()
     _mk(spark, real / "t")
